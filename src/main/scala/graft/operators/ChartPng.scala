@@ -1,7 +1,10 @@
 package graft.operators
 
 import java.awt.image.BufferedImage
+import java.io.ByteArrayOutputStream
+import java.nio.file.{Files, Path}
 import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageOutputStream
 import org.apache.spark.sql.DataFrame
 
 /** PNG emission for the w18 chart raster — the reference's rendering
@@ -17,7 +20,9 @@ import org.apache.spark.sql.DataFrame
   * communicates. The storage PUT stays environment-bound (zero
   * egress): files land in an output directory and the chart catalog
   * is updated per rendered file, mirroring the reference's
-  * upload → `set_status` sequence (main.py:425-440).
+  * upload → `set_status` sequence (main.py:425-440). Encoding is
+  * distributed (one task group per chart, see [[renderAll]]); only
+  * the file writes and catalog updates stay on the driver.
   */
 object ChartPng {
 
@@ -26,60 +31,82 @@ object ChartPng {
     0x004adb, 0x306cde, 0x468de0, 0x5aadde, 0x75cdd6,
     0xb3e8b6, 0xffde98, 0xfcad6e, 0xf27946, 0xe43a20)
 
-  /** Render ONE chart — a single (lday, vertex) slice of w18's
-    * raster, rows (lat, glon, band) — to a PNG at `out`. Returns
-    * (width, height) in pixels.
-    *
-    * The collect here is the terminal presentation boundary, not a
-    * distributed-compute smell: a chart's grid is bounded (the full
-    * 0.25° global grid is 721×1441 ≈ 1M cells) and the reference
-    * crosses the same boundary when it hands the day's array to
-    * matplotlib. Everything upstream — the thermal chain, extremes,
-    * banding, wrap — stays distributed in w18.
+  /** Encode ONE chart — the cells (lat, glon, band) of a single
+    * (lday, vertex) slice of w18's raster — to PNG bytes. Returns
+    * (width, height, bytes). Pure and in memory (the ImageIO writer
+    * goes through a [[MemoryCacheImageOutputStream]], never a temp
+    * cache file), so it runs the same on the driver and inside an
+    * executor task.
     */
-  def render(slice: DataFrame, out: java.nio.file.Path): (Int, Int) = {
-    val rows = slice.selectExpr("lat", "glon", "CAST(band AS INT) AS band")
-      .collect()
-      .map(r => (r.getDouble(0), r.getDouble(1), r.getInt(2)))
-    require(rows.nonEmpty, s"empty chart slice for $out")
-    val lats = rows.map(_._1).distinct.sorted(Ordering[Double].reverse) // north up
-    val lons = rows.map(_._2).distinct.sorted // west -> east, wrap col last
+  def encode(cells: Array[(Double, Double, Int)]): (Int, Int, Array[Byte]) = {
+    require(cells.nonEmpty, "empty chart slice")
+    val lats = cells.map(_._1).distinct.sorted(Ordering[Double].reverse) // north up
+    val lons = cells.map(_._2).distinct.sorted // west -> east, wrap col last
     val latIdx = lats.zipWithIndex.toMap
     val lonIdx = lons.zipWithIndex.toMap
     val img = new BufferedImage(lons.length, lats.length, BufferedImage.TYPE_INT_RGB)
-    rows.foreach { case (la, lo, b) =>
+    cells.foreach { case (la, lo, b) =>
       img.setRGB(lonIdx(lo), latIdx(la), palette(b))
     }
-    java.nio.file.Files.createDirectories(out.getParent)
-    ImageIO.write(img, "png", out.toFile)
-    (lons.length, lats.length)
+    val bytes = new ByteArrayOutputStream()
+    val ios = new MemoryCacheImageOutputStream(bytes)
+    try require(ImageIO.write(img, "png", ios), "no PNG writer")
+    finally ios.close()
+    (lons.length, lats.length, bytes.toByteArray)
+  }
+
+  private def write(out: Path, png: Array[Byte]): Unit = {
+    Files.createDirectories(out.getParent)
+    Files.write(out, png)
+  }
+
+  /** Render ONE chart slice (rows lat, glon, band) to a PNG at `out`.
+    * Returns (width, height) in pixels. The collect is the terminal
+    * presentation boundary: a chart's grid is bounded (the full 0.25°
+    * global grid is 721×1441 ≈ 1M cells), and the reference crosses
+    * the same boundary when it hands the day's array to matplotlib.
+    */
+  def render(slice: DataFrame, out: Path): (Int, Int) = {
+    val (w, h, png) = encode(
+      slice.selectExpr("lat", "glon", "CAST(band AS INT) AS band")
+        .collect()
+        .map(r => (r.getDouble(0), r.getDouble(1), r.getInt(2))))
+    write(out, png)
+    (w, h)
   }
 
   /** Render every (lday, vertex) chart of a w18-shaped raster into
     * `outDir` with the reference's file-name shape
-    * (`{day}Z_utci_{vertex}_from_{sourceVersion}.png`,
-    * main.py:418), calling `onRendered(day, fileName)` after each
-    * file lands — the hook where W4hJob updates the chart catalog.
-    * Chart count is bounded (days × 2), so the driver-side loop is
-    * the reference's own per-day/per-vertex loop (main.py:401-443).
+    * (`{day}Z_utci_{vertex}_from_{sourceVersion}.png`, main.py:418),
+    * calling `onRendered(day, fileName)` after each file lands — the
+    * hook where W4hJob updates the chart catalog.
+    *
+    * One distributed pass, whatever the chart count: the raster is
+    * grouped by (lday, vertex), each group — one chart's bounded
+    * grid — is encoded to PNG bytes inside its task, and only the
+    * (day, vertex, bytes) rows are collected. The driver then writes
+    * the files in sorted (day, vertex) order and runs the callback
+    * after each one, keeping the reference's per-file
+    * upload → `set_status` order (main.py:401-443) on the driver.
     */
-  def renderAll(raster: DataFrame, outDir: java.nio.file.Path,
-                sourceVersion: String)(
+  def renderAll(raster: DataFrame, outDir: Path, sourceVersion: String)(
       onRendered: (Long, String) => Unit): Int = {
-    import org.apache.spark.sql.functions.col
     val sess = raster.sparkSession
     import sess.implicits._
-    val cached = raster.cache()
-    try {
-      val keys = cached.select($"lday".as[Long], $"vertex".as[String])
-        .distinct().collect().sorted
-      keys.foreach { case (day, vertex) =>
-        val name = s"${day}Z_utci_${vertex}_from_$sourceVersion.png"
-        render(cached.filter(col("lday") === day && col("vertex") === vertex),
-          outDir.resolve(name))
-        onRendered(day, name)
+    val pngs = raster
+      .selectExpr("lday", "vertex", "lat", "glon", "CAST(band AS INT) AS band")
+      .as[(Long, String, Double, Double, Int)]
+      .groupByKey(c => (c._1, c._2))
+      .mapGroups { (key: (Long, String), cells: Iterator[(Long, String, Double, Double, Int)]) =>
+        (key._1, key._2, encode(cells.map(c => (c._3, c._4, c._5)).toArray)._3)
       }
-      keys.length
-    } finally { cached.unpersist(); () }
+      .collect()
+      .sortBy(c => (c._1, c._2))
+    pngs.foreach { case (day, vertex, png) =>
+      val name = s"${day}Z_utci_${vertex}_from_$sourceVersion.png"
+      write(outDir.resolve(name), png)
+      onRendered(day, name)
+    }
+    pngs.length
   }
 }

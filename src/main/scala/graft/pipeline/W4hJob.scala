@@ -146,10 +146,12 @@ object W4hJob {
         .as[Long].collect().sorted
       // ---- PNG rendering + chart catalog (main.py:399-443): the
       // reference's fig.savefig becomes a JDK ImageIO raster of the
-      // banded field; the storage PUT is environment-bound (zero
-      // egress) so files land in the work dir, and the catalog
-      // status updates per rendered file exactly like the
-      // upload → set_status sequence (main.py:425-440)
+      // banded field. Every chart is encoded in one distributed pass
+      // (one group per (day, vertex)) and only the PNG bytes reach
+      // the driver. The storage PUT is environment-bound (zero
+      // egress), so the driver writes the files into the work dir in
+      // sorted order and updates the catalog after each one, like
+      // the upload → set_status sequence (main.py:425-440)
       val nPng = graft.operators.ChartPng.renderAll(
         graft.operators.Weather.chartRaster(
           charts.filter($"lday" >= t.earliestChartDay), "t"),
@@ -159,10 +161,13 @@ object W4hJob {
       }
       // prune catalog entries older than the earliest retained day
       // (main.py:352-359: the reference deletes globalCharts.<date>
-      // keys before earliest_global_chart_date)
+      // keys before earliest_global_chart_date). Only day-number keys
+      // are this job's; any other suffix (e.g. the reference's own
+      // date keys) is left alone rather than failing the run.
       status.fetch().keys
         .filter(_.startsWith("globalCharts."))
-        .filter(_.stripPrefix("globalCharts.").toLong < t.earliestChartDay)
+        .filter(_.stripPrefix("globalCharts.").toLongOption
+          .exists(_ < t.earliestChartDay))
         .foreach(status.unset)
       timer.log(s"chart data written, $nPng PNGs rendered")
 

@@ -37,6 +37,99 @@ class ChartPngSpec extends AnyFunSuite {
     (0 until h).foreach(y => assert(img.getRGB(0, y) == img.getRGB(w - 1, y)))
   }
 
+  /** A synthetic w18-shaped raster: `days` local days × both
+    * vertices, day d on a (3 + d) × (4 + d) grid so every slice has
+    * its own size, and a band that differs per cell, day and vertex.
+    */
+  private def raster(days: Int) = {
+    import spark.implicits._
+    (for {
+      d <- 0 until days; v <- Seq("highs", "lows")
+      i <- 0 until 3 + d; j <- 0 until 4 + d
+    } yield (d.toLong + 100, v, 10.0 - 2.5 * i, 5.0 * j,
+      (i * 7 + j * 3 + d + (if (v == "lows") 5 else 0)) % 10))
+      .toDF("lday", "vertex", "lat", "glon", "band")
+  }
+
+  /** Runs `f` and returns its result with the number of Spark jobs it
+    * launched: the listener counts jobs tagged with a local property,
+    * and a marker job run after `f` drains the (in-order) listener
+    * queue.
+    */
+  private def withJobCount[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.spec.phase"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("measured") => jobs.incrementAndGet()
+          case Some("marker") => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "measured")
+      val out = try f finally sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("renderAll: one file per (day, vertex), pixel-exact, callback in sorted order after each file lands") {
+    import spark.implicits._
+    val r = raster(days = 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft_pngs").resolve("out")
+    val seen = Seq.newBuilder[(Long, String)]
+    val n = graft.operators.ChartPng.renderAll(r, dir, "gfs20240101_00z") { (day, name) =>
+      assert(java.nio.file.Files.isRegularFile(dir.resolve(name)), s"$name not on disk yet")
+      seen += ((day, name))
+    }
+    val keys = for (d <- 100L to 102L; v <- Seq("highs", "lows")) yield (d, v)
+    assert(n == 6)
+    assert(seen.result() ==
+      keys.map { case (d, v) => (d, s"${d}Z_utci_${v}_from_gfs20240101_00z.png") })
+    assert(java.nio.file.Files.list(dir).count() == 6)
+    keys.foreach { case (d, v) =>
+      val cells = r.filter($"lday" === d && $"vertex" === v)
+        .select($"lat".as[Double], $"glon".as[Double], $"band".as[Int]).collect()
+      val img = ImageIO.read(dir.resolve(s"${d}Z_utci_${v}_from_gfs20240101_00z.png").toFile)
+      assert(img.getWidth == 4 + (d - 100) && img.getHeight == 3 + (d - 100))
+      val lats = cells.map(_._1).distinct.sorted(Ordering[Double].reverse)
+      val lons = cells.map(_._2).distinct.sorted
+      val li = lats.zipWithIndex.toMap
+      val gi = lons.zipWithIndex.toMap
+      cells.foreach { case (la, lo, b) =>
+        assert((img.getRGB(gi(lo), li(la)) & 0xffffff) ==
+          graft.operators.ChartPng.palette(b), s"day $d $v cell ($la, $lo)")
+      }
+    }
+    // an empty raster renders nothing and never calls back
+    val empty = dir.resolveSibling("empty")
+    assert(graft.operators.ChartPng.renderAll(r.limit(0), empty, "v") { (_, _) =>
+      fail("callback on an empty raster") } == 0)
+    assert(!java.nio.file.Files.exists(empty))
+  }
+
+  test("renderAll's Spark job count does not grow with the chart count") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pngjobs")
+    def render(days: Int) = {
+      val r = raster(days)
+      withJobCount(graft.operators.ChartPng.renderAll(r, dir.resolve(s"d$days"), "v")((_, _) => ()))
+    }
+    val (n2, jobs2) = render(1)
+    val (n6, jobs6) = render(3)
+    assert(n2 == 2 && n6 == 6)
+    assert(jobs2 >= 1 && jobs2 == jobs6, s"2 charts: $jobs2 jobs, 6 charts: $jobs6 jobs")
+  }
+
   test("m10 JPEG roundtrip: golden decoded features at fixed quality") {
     import graft.operators.Media
     // pinned decoded quadrant sums at jpegQuality = 0.9f — regression

@@ -100,6 +100,10 @@ class W4hJobSpec extends AnyFunSuite {
     status.set("globalCharts.-5", "old_source")
     status.set("globalCharts.1", "old_source")
     status.set("globalCharts.28", "old_source")
+    // a key whose suffix is not a day number (the reference's own
+    // date-keyed shape) is not this job's to prune: it must neither
+    // fail the run nor be removed
+    status.set("globalCharts.2024-01-01", "old_source")
     // nowHour=100 -> earliestChartDay=2: days -5 and 1 are stale
     val r = W4hJob.run(spark, sf, root, "gfs20240102_00z", nowHour = 100)
     assert(r.outcome == "completed")
@@ -107,6 +111,8 @@ class W4hJobSpec extends AnyFunSuite {
     assert(!st.contains("globalCharts.-5"))
     assert(!st.contains("globalCharts.1"))
     assert(st.contains("globalCharts.28"))
+    assert(st.get("globalCharts.2024-01-01").contains("old_source"))
+    assert(st("latestSuccessfulUpdateSource") == "gfs20240102_00z")
     // retained + freshly charted days all carry a source version
     assert(st.keys.count(_.startsWith("globalCharts.")) >= 1)
   }
