@@ -55,26 +55,6 @@ object ChartPng {
     (lons.length, lats.length, bytes.toByteArray)
   }
 
-  private def write(out: Path, png: Array[Byte]): Unit = {
-    Files.createDirectories(out.getParent)
-    Files.write(out, png)
-  }
-
-  /** Render ONE chart slice (rows lat, glon, band) to a PNG at `out`.
-    * Returns (width, height) in pixels. The collect is the terminal
-    * presentation boundary: a chart's grid is bounded (the full 0.25°
-    * global grid is 721×1441 ≈ 1M cells), and the reference crosses
-    * the same boundary when it hands the day's array to matplotlib.
-    */
-  def render(slice: DataFrame, out: Path): (Int, Int) = {
-    val (w, h, png) = encode(
-      slice.selectExpr("lat", "glon", "CAST(band AS INT) AS band")
-        .collect()
-        .map(r => (r.getDouble(0), r.getDouble(1), r.getInt(2))))
-    write(out, png)
-    (w, h)
-  }
-
   /** Render every (lday, vertex) chart of a w18-shaped raster into
     * `outDir` with the reference's file-name shape
     * (`{day}Z_utci_{vertex}_from_{sourceVersion}.png`, main.py:418),
@@ -102,9 +82,10 @@ object ChartPng {
       }
       .collect()
       .sortBy(c => (c._1, c._2))
+    if (pngs.nonEmpty) Files.createDirectories(outDir)
     pngs.foreach { case (day, vertex, png) =>
       val name = s"${day}Z_utci_${vertex}_from_$sourceVersion.png"
-      write(outDir.resolve(name), png)
+      Files.write(outDir.resolve(name), png)
       onRendered(day, name)
     }
     pngs.length

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Bounded
 
 /** Deduplication operators over `documents` (SURVEY.md §2 d1-d5).
   *
@@ -610,25 +611,20 @@ object Dedup {
     * rounds run, converged).
     */
   private[graft] def ccPropagate(edges: DataFrame, maxRounds: Int,
-      localMax: Long = ccStarsLocalMax): (DataFrame, Int, Boolean) = {
+      localMax: Long = Bounded.smallBudget): (DataFrame, Int, Boolean) = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // round-18 bounded-local fast path (guide §1.2 — the
-    // [[ccStarsLocalMax]] gate): a dup-pair edge set at or under the
-    // gate is metadata — run the IDENTICAL one-hop min-label rounds
-    // on the driver (same per-round next = min over self ∪ incoming
-    // labels, same convergence detection and round count) instead of
-    // paying ~5 AQE stage jobs per diameter round. The gate adapts
-    // per input at runtime; a corpus-grain edge set stays
-    // distributed. Probe and collect are ONE pass (round 19 — the
-    // probe-then-collect pair paid two evaluations of the upstream
-    // dup-pair plan): collect at most gate+1 rows; hitting the limit
-    // IS the over-gate verdict and the rows are discarded.
-    val probe = if (localMax < 0L) Array.empty[(Long, Long)]
-      else edges.select($"src", $"dst")
-        .limit(localMax.toInt + 1).as[(Long, Long)].collect()
-    if (localMax >= 0L && probe.length <= localMax) {
-      val eL = probe
+    // round-18 bounded-local fast path (guide §1.2): a dup-pair edge
+    // set within the [[Bounded]] gate is metadata — run the IDENTICAL
+    // one-hop min-label rounds on the driver (same per-round next =
+    // min over self ∪ incoming labels, same convergence detection and
+    // round count) instead of paying ~5 AQE stage jobs per diameter
+    // round. The gate adapts per input at runtime; a corpus-grain
+    // edge set stays distributed.
+    val local = Bounded.collect(
+      edges.select($"src", $"dst").as[(Long, Long)], localMax)
+    if (local.isDefined) {
+      val eL = local.get
       val und = eL ++ eL.map(p => (p._2, p._1))
       val inc = und.groupBy(_._2) // id -> (src, id) incoming edges
       val nodesL = und.iterator.map(_._1).toSet
@@ -694,34 +690,6 @@ object Dedup {
     (labels, rounds, converged)
   }
 
-  /** Alternating large-star/small-star contraction (Kiveris et al.
-    * 2014, "Connected Components in MapReduce and Beyond") over an
-    * edge list (src, dst): converges in O(log n) ROUNDS regardless of
-    * diameter — the web-scale path for long-chain components where
-    * propagation needs diameter rounds.
-    *
-    * Large-star connects every neighbor LARGER than a node to the min
-    * of its closed neighborhood; small-star connects the
-    * smaller-or-equal neighbors (and the node) to that min. At the
-    * fixpoint the edges form stars rooted at each component's minimum
-    * node. Per round: two groupBy-min shuffles + a distinct.
-    * Convergence = edge-set fingerprint (count, xxhash XOR-fold) unchanged
-    * — one tiny aggregate row per round, no full set compare.
-    * Returns (labels(id, lbl), rounds run, converged).
-    */
-  /** Size gate for [[ccStars]]'s bounded-local fast path (round 18,
-    * guide §1.2): a canonical edge set at or under this row count is
-    * METADATA, not data — the dq11 quorum-vote bounded-collect class
-    * — and iterating the identical star alternation on the driver
-    * skips ~6 AQE stage jobs per round. Inputs that are bounded BY
-    * CONSTRUCTION (w25/w27/w30's grid-bounded blob/segment graphs,
-    * v17's seeded dup pairs) take this path at every corpus scale;
-    * corpus-grain inputs (g4's 3n-edge graph) exceed the gate and
-    * keep the distributed loop — the decision adapts at runtime,
-    * per input, from a count the initial `sig` already computed.
-    */
-  private[graft] val ccStarsLocalMax = 4096L
-
   /** The driver-side twin of [[ccStars]]'s round loop: the SAME
     * alternating large-star/small-star contraction over a collected
     * canonical edge set, with convergence by exact set equality.
@@ -760,8 +728,33 @@ object Dedup {
     (e, rounds, converged)
   }
 
+  /** Alternating large-star/small-star contraction (Kiveris et al.
+    * 2014, "Connected Components in MapReduce and Beyond") over an
+    * edge list (src, dst): converges in O(log n) ROUNDS regardless of
+    * diameter — the web-scale path for long-chain components where
+    * propagation needs diameter rounds.
+    *
+    * Large-star connects every neighbor LARGER than a node to the min
+    * of its closed neighborhood; small-star connects the
+    * smaller-or-equal neighbors (and the node) to that min. At the
+    * fixpoint the edges form stars rooted at each component's minimum
+    * node. Per round: two groupBy-min shuffles + a distinct.
+    * Convergence = edge-set fingerprint (count, xxhash XOR-fold) unchanged
+    * — one tiny aggregate row per round, no full set compare.
+    * Returns (labels(id, lbl), rounds run, converged).
+    *
+    * Bounded-local fast path (round 18, guide §1.2): a canonical edge
+    * set of at most `localMax` rows is METADATA — the dq11
+    * quorum-vote bounded-collect class — and iterating the identical
+    * star alternation on the driver ([[ccStarsLocal]]) skips ~6 AQE
+    * stage jobs per round. Inputs bounded BY CONSTRUCTION
+    * (w25/w27/w30's grid-bounded blob/segment graphs, v17's seeded
+    * dup pairs) take it at every corpus scale. Unlike the other
+    * twins it needs no [[Bounded.collect]] probe: the decision comes
+    * from the row count the initial `sig` already observed.
+    */
   private[graft] def ccStars(edges: DataFrame, maxRounds: Int,
-      localMax: Long = ccStarsLocalMax): (DataFrame, Int, Boolean) = {
+      localMax: Long = Bounded.smallBudget): (DataFrame, Int, Boolean) = {
     val spark = edges.sparkSession
     import spark.implicits._
     def canon(df: DataFrame): DataFrame = df
@@ -786,9 +779,9 @@ object Dedup {
     val (e0, sig0) = sigObs(canon(edges.select($"src".as("a"), $"dst".as("b"))))
     var e = e0
     var curSig = sig0()
-    if (localMax >= 0L && curSig._1 <= localMax) {
+    if (curSig._1 <= localMax) {
       // BOUNDED-LOCAL PATH: the star set is metadata-sized — collect
-      // it once (≤ [[ccStarsLocalMax]] two-long rows), run the same
+      // it once (≤ `localMax` two-long rows), run the same
       // alternation on the driver, and mirror the distributed tail
       // exactly: every INPUT-graph node gets a label (self-loop-only
       // nodes rejoin as singletons via the same min/coalesce shape).

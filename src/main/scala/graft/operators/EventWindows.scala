@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Bounded
 
 /** Event-time window analytics over the `events` table — the batch
   * counterparts of the streaming queries in [[graft.streaming]].
@@ -1135,7 +1136,7 @@ object EventWindows {
     * fixpoint.
     */
   private[graft] def e19Stationary(counts: DataFrame,
-      localMax: Long = graft.operators.Dedup.ccStarsLocalMax): DataFrame = {
+      localMax: Long = Bounded.smallBudget): DataFrame = {
     val spark = counts.sparkSession
     import spark.implicits._
     // The transition matrix is ≤ |event-types|²-row METADATA on any
@@ -1146,19 +1147,17 @@ object EventWindows {
     // (distinct event_type values come from the corpus), so the
     // local path is GATED like every other bounded-local twin
     // (ccStars/louvain/g26): one corpus-scale pass lands the matrix
-    // in a checkpoint, a limit-bounded collect both probes the gate
-    // and delivers the rows, and an over-gate matrix falls back to
-    // the distributed round loop — identical BIGINT arithmetic
-    // either way (round 19; guide §1.2 + §5 bounded collect).
+    // in a checkpoint, [[Bounded.collect]] delivers it, and an
+    // over-gate matrix falls back to the distributed round loop —
+    // identical BIGINT arithmetic either way (round 19; guide §1.2 +
+    // §5 bounded collect).
     val m = counts
       .withColumn("rowsum", sum($"n").over(Window.partitionBy($"prev_type")))
       .select($"prev_type", $"event_type", $"n", $"rowsum")
       .localCheckpoint()
-    val gate = localMax
-    val mRows = if (gate < 0L) Array.empty[(String, String, Long, Long)]
-      else m.limit(gate.toInt + 1)
-        .as[(String, String, Long, Long)].collect()
-    if (gate >= 0L && mRows.length <= gate) {
+    val local = Bounded.collect(m.as[(String, String, Long, Long)], localMax)
+    if (local.isDefined) {
+      val mRows = local.get
       graft.functions.Lineage.freeCheckpoint(m)
       val states = mRows.map(_._1).distinct
       val nStates = states.length.toLong
@@ -1306,9 +1305,9 @@ object EventWindows {
     // rows (~180 here) at ANY event count — but the state set is
     // data-dependent (event_type values come from the corpus), so
     // the local path is GATED like every other bounded-local twin
-    // (ccStars/louvain/g26; round 19): the limit-bounded collect
-    // both probes the gate and delivers the rows, and an over-gate
-    // matrix falls back to the distributed absorbing-chain loop.
+    // (ccStars/louvain/g26; round 19): [[Bounded.collect]] delivers
+    // the rows, and an over-gate matrix falls back to the
+    // distributed absorbing-chain loop.
     // Running the 24 rounds as distributed jobs paid 24 checkpoint
     // job latencies over ≤ 180 rows for zero distribution win
     // (guide §1.2: the distributed algorithm first — don't
@@ -1325,15 +1324,14 @@ object EventWindows {
     * scenario matrix — factored so the spec can drive both paths
     * (localMax < 0 forces the distributed loop) on one input. */
   private[graft] def e20Attr(m: DataFrame, scens: DataFrame,
-      localMax: Long = graft.operators.Dedup.ccStarsLocalMax): DataFrame = {
+      localMax: Long = Bounded.smallBudget): DataFrame = {
     val spark = m.sparkSession
     import spark.implicits._
-    val gate = localMax
-    val mRows = if (gate < 0L) Array.empty[(String, String, String, Long, Long)]
-      else m.select($"scen", $"s", $"t", $"n", $"rowsum")
-        .limit(gate.toInt + 1)
-        .as[(String, String, String, Long, Long)].collect()
-    if (gate < 0L || mRows.length > gate) return e20Distributed(m, scens)
+    val mRows = Bounded.collect(m.select($"scen", $"s", $"t", $"n", $"rowsum")
+        .as[(String, String, String, Long, Long)], localMax) match {
+      case Some(rows) => rows
+      case None => return e20Distributed(m, scens)
+    }
     val transient = mRows.map(r => (r._1, r._2)).distinct
     var x = transient.map(_ -> 0L).toMap
     (1 to e20Rounds).foreach { _ =>

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Bounded
 
 /** Graph centrality for crawl curation (SURVEY.md §2 g1): large-scale
   * corpus pipelines rank hosts/pages by link centrality to prioritize
@@ -2505,7 +2506,7 @@ object Graph {
   private[graft] def louvainStatesW(init: DataFrame, edgesW: DataFrame,
       degAll0: DataFrame, m: Long, rounds: Int, keepAll: Boolean = false,
       callerCached: Boolean = false, condensed: Boolean = false,
-      localMax: Long = graft.operators.Dedup.ccStarsLocalMax): Seq[DataFrame] =
+      localMax: Long = Bounded.smallBudget): Seq[DataFrame] =
     louvainStatesWM(init, edgesW, degAll0, m, rounds, keepAll,
       callerCached, condensed, localMax)._1
 
@@ -2522,7 +2523,7 @@ object Graph {
   private[graft] def louvainStatesWM(init: DataFrame, edgesW: DataFrame,
       degAll0: DataFrame, m: Long, rounds: Int, keepAll: Boolean = false,
       callerCached: Boolean = false, condensed: Boolean = false,
-      localMax: Long = graft.operators.Dedup.ccStarsLocalMax)
+      localMax: Long = Bounded.smallBudget)
       : (Seq[DataFrame], Boolean) = {
     val spark = init.sparkSession
     import spark.implicits._
@@ -2534,27 +2535,22 @@ object Graph {
     // paying ~10 AQE stage jobs per round. Level-1 callers never
     // probe (corpus grain, the probe itself would be waste); the
     // keepAll audit path always takes the distributed loop.
-    if (condensed && !keepAll && localMax >= 0L) {
-      // probe and collect are ONE pass per input (round 19 — the
-      // count-probe-then-collect pair evaluated each condensed frame
-      // twice): collect at most gate+1 rows; hitting the limit IS
-      // the over-gate verdict and the partial rows are discarded.
-      val gate = localMax
-      val initP = init.select($"id", $"lbl").limit(gate.toInt + 1)
-        .as[(Long, Long)].collect()
-      val eP = if (initP.length <= gate)
-          edgesW.select($"src", $"dst", $"w").limit(gate.toInt + 1)
-            .as[(Long, Long, Long)].collect()
-        else Array.empty[(Long, Long, Long)]
-      if (initP.length <= gate && eP.length <= gate) {
+    if (condensed && !keepAll) {
+      val local = for {
+        initP <- Bounded.collect(init.select($"id", $"lbl").as[(Long, Long)],
+          localMax)
+        eP <- Bounded.collect(
+          edgesW.select($"src", $"dst", $"w").as[(Long, Long, Long)], localMax)
+      } yield {
         val dL = degAll0.select($"id", $"d").as[(Long, Long)]
           .collect().toMap
         // the init ⋈ strengths join is INNER distributedly — mirror
         val initL = initP.toSeq.filter(p => dL.contains(p._1))
         val lbl = louvainRoundsLocal(initL, eP.toSeq, dL, m, rounds)
         val movedL = initL.exists { case (id, l0) => lbl(id) != l0 }
-        return (Seq(lbl.toSeq.toDF("id", "lbl")), movedL)
+        (Seq(lbl.toSeq.toDF("id", "lbl")), movedL)
       }
+      if (local.isDefined) return local.get
     }
     // callerCached: retained for call-site documentation — since
     // round 18 the strength table is read exactly ONCE (the init
@@ -2975,31 +2971,20 @@ object Graph {
     * forces the distributed loop) on one input. Same per-unit-weight
     * quotient q = ((r·85) div 100) div outw, same q·w shares, same
     * base + Σ fold on either path — all positive Longs, Scala `/`
-    * == SQL div. */
-  /** Gate of [[g26RankLoop]]'s bounded-local path: the loop state is
-    * (src, dst, w) Longs at CONDENSED grain — 2^17 edges ≈ 3 MB on
-    * the driver, and the local iteration is O(rounds · edges) long
-    * arithmetic (~1.3 M ops at the gate). The sf0.1 condensation
-    * (~10^4–10^5 edges) sat OVER the conservative 4096 gate and paid
-    * 10 distributed rounds (~40 jobs) for a matrix that fits in a
-    * few MB — measured round 19. */
-  private[graft] val g26RankLocalMax: Long = 1L << 17
-
+    * == SQL div. The local iteration is O(rounds · edges) long
+    * arithmetic (~1.3 M ops at [[Bounded.largeBudget]]); `nc` is
+    * already known from the base computation, so only the condensed
+    * edges are probed. */
   private[graft] def g26RankLoop(comms: DataFrame, edges: DataFrame,
       nc: Long, base: Long,
-      localMax: Long = g26RankLocalMax): DataFrame = {
+      localMax: Long = Bounded.largeBudget): DataFrame = {
     val spark = comms.sparkSession
     import spark.implicits._
-    val gate = localMax
-    // probe and collect are ONE pass (round 19): collect at most
-    // gate+1 condensed edges; hitting the limit IS the over-gate
-    // verdict (nc is already known from the base computation)
-    val eP = if (gate >= 0L && nc <= gate)
-        edges.select($"src", $"dst", $"w").limit(gate.toInt + 1)
-          .as[(Long, Long, Long)].collect()
-      else Array.empty[(Long, Long, Long)]
-    if (gate >= 0L && nc <= gate && eP.length <= gate) {
-      val eL = eP
+    val local = if (nc > localMax) None
+      else Bounded.collect(
+        edges.select($"src", $"dst", $"w").as[(Long, Long, Long)], localMax)
+    if (local.isDefined) {
+      val eL = local.get
       val outw = eL.groupBy(_._1).map { case (s, xs) =>
         s -> xs.iterator.map(_._3).sum
       }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Bounded
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2 v1-v3):
   * brute-force cosine top-k as the exact baseline, plus the two
@@ -1895,14 +1896,6 @@ object Knn {
   private[operators] val v21Reps = 8 // entry nodes per probed cluster
   private[operators] val v21Beam = 8
   private[operators] val v21Hops = 6
-  /** Per-collect row gate of the driver-local hop loop in
-    * [[v21SearchOn]]: raw candidate pairs per hop are bounded by
-    * queries·beam·degree (the search's own scale argument), so the
-    * gate only trips when that bound is violated in practice (a
-    * pathological hub after symmetrization) — the search then
-    * restarts on the distributed loop. 2^17 rows ≈ 3 MB of
-    * (qid,node) pairs on the driver, ~18× the bench-scale hop. */
-  private[operators] val v21LocalMax = 1 << 17
 
   /** v21: GRAPH-TRAVERSAL ANN — greedy beam search over the kNN
     * graph, the serving-side half of the dominant modern ANN family
@@ -2116,8 +2109,8 @@ object Knn {
     * index.
     */
   private[graft] def v21SearchOn(ix: V21Static,
-      qsArr: Array[(Long, Array[Double])], keepAll: Boolean = false)
-      : Seq[DataFrame] = {
+      qsArr: Array[(Long, Array[Double])], keepAll: Boolean = false,
+      localMax: Long = Bounded.largeBudget): Seq[DataFrame] = {
     val spark = ix.e.sparkSession
     import spark.implicits._
     val e = ix.e
@@ -2210,29 +2203,17 @@ object Knn {
     // sized sides (graph, vectors) still never move: they are
     // scanned exactly as the distributed loop scans them, by the
     // same joins, and the scores come from the same `score` helper
-    // (same cosQ, executed on executors). Gate: every collect is
-    // limit-probed against [[v21LocalMax]]; over the gate the search
-    // RESTARTS on the distributed loop below (side-effect-free and
-    // deterministic, so the restart is just the rare-case cost).
-    // graft.v21.localMax=0 forces the distributed path (plan pin +
-    // the local==distributed property specs use it); checkpoint=
-    // false (plan-inspection mode) also keeps the distributed path.
-    def searchLocal(gate: Int): Option[Seq[DataFrame]] = {
-      def capped(df: DataFrame): Option[Array[(Long, Long)]] = {
-        val rows = df.limit(gate + 1).select($"qid", $"node")
-          .as[(Long, Long)].collect()
-        if (rows.length > gate) None else Some(rows)
-      }
-      // the capped collects are limit queries: without this,
-      // executeTake's partition escalation (1, 4, 16… partitions)
-      // turns each under-limit collect into several jobs — scanning
-      // everything in the FIRST pass keeps the gate at one job per
-      // collect (scoped to the loop and restored, like the AQE
-      // toggle below)
-      val limKey = "spark.sql.limit.initialNumPartitions"
-      val limPrev = spark.conf.getOption(limKey)
-      spark.conf.set(limKey, Int.MaxValue.toString)
-      try {
+    // (same cosQ, executed on executors). Gate: every collect goes
+    // through [[Bounded.collect]] with `localMax` (raw candidate pairs
+    // per hop are bounded by queries·beam·degree, so it only trips on
+    // a pathological hub after symmetrization); over the gate the
+    // search RESTARTS on the distributed loop below (side-effect-free
+    // and deterministic, so the restart is just the rare-case cost).
+    // A negative `localMax` forces the distributed path; checkpoint=
+    // false (plan-inspection mode) also keeps it.
+    def searchLocal(): Option[Seq[DataFrame]] = {
+      def capped(df: DataFrame): Option[Array[(Long, Long)]] =
+        Bounded.collect(df.select($"qid", $"node").as[(Long, Long)], localMax)
       def scoreIds(ids: Array[(Long, Long)]): Array[(Long, Long, Double)] =
         if (ids.isEmpty) Array.empty
         else score(ids.toSeq.toDF("qid", "node"))
@@ -2293,18 +2274,10 @@ object Knn {
         }
         if (over) None else Some(states.toSeq)
       }
-      } finally {
-        limPrev match {
-          case Some(v) => spark.conf.set(limKey, v)
-          case None => spark.conf.unset(limKey)
-        }
-      }
     }
     spark.conf.set(aqeKey, "false")
     try {
-      val localGate = spark.conf.getOption("graft.v21.localMax").map(_.toInt)
-        .getOrElse(v21LocalMax)
-      if (ckpt && localGate > 0) searchLocal(localGate) match {
+      if (ckpt) searchLocal() match {
         case Some(states) => return states
         case None => () // over-gate: fall through to the distributed loop
       }

@@ -133,15 +133,19 @@ object W4hJob {
       timer.log("uploaded forecast documents")
 
       // ---- hour-angle shift + daily extremes + contour bands (main.py:341-443)
-      val charts = merged
+      // aggregated ONCE: the day list and the PNG raster read the
+      // written chart parquet back instead of re-running the
+      // (lat, lon, lday) aggregation over `merged`
+      val chartsPath = s"$workRoot/charts/$sourceVersion"
+      val daily = merged
         .withColumn("uha", expr("CASE WHEN CAST(floor(lon / 15.0 + 0.5) AS BIGINT) > 12" +
           " THEN CAST(floor(lon / 15.0 + 0.5) AS BIGINT) - 24" +
           " ELSE CAST(floor(lon / 15.0 + 0.5) AS BIGINT) END"))
         .withColumn("lday", expr("CAST(floor(CAST(aoff + uha AS DOUBLE) / 24.0) AS BIGINT)"))
         .groupBy($"lat", $"lon", $"lday")
         .agg(max($"utci_c").as("hi"), min($"utci_c").as("lo"))
-      charts.write.mode("overwrite")
-        .parquet(s"$workRoot/charts/$sourceVersion")
+      daily.write.mode("overwrite").parquet(chartsPath)
+      val charts = spark.read.schema(daily.schema).parquet(chartsPath)
       val chartDays = charts.select($"lday").distinct()
         .as[Long].collect().sorted
       // ---- PNG rendering + chart catalog (main.py:399-443): the

@@ -18,11 +18,10 @@ class ChartPngSpec extends AnyFunSuite {
     val slice = raster.filter($"lday" === day && $"vertex" === vertex)
     val rows = slice.select($"lat".as[Double], $"glon".as[Double],
       $"band".as[Int]).collect()
-    val out = java.nio.file.Files.createTempDirectory("graft_png").resolve("c.png")
-    val (w, h) = graft.operators.ChartPng.render(slice, out)
+    val (w, h, png) = graft.operators.ChartPng.encode(rows)
     assert(w == rows.map(_._2).distinct.length)
     assert(h == rows.map(_._1).distinct.length)
-    val img = ImageIO.read(out.toFile)
+    val img = ImageIO.read(new java.io.ByteArrayInputStream(png))
     assert(img.getWidth == w && img.getHeight == h)
     // every cell's pixel is exactly its band's palette entry
     val lats = rows.map(_._1).distinct.sorted(Ordering[Double].reverse)

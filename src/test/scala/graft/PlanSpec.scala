@@ -969,7 +969,7 @@ class PlanSpec extends AnyFunSuite {
     assert(bnlj <= 2, s"nested-loop beyond the two dense-grid broadcasts ($bnlj):\n$p")
     // ccStars labels arrive as PRECOMPUTED state, never re-derived
     // inline — shape-aware since the round-18 bounded-local path:
-    // a blob graph over ccStarsLocalMax enters as a checkpointed
+    // a blob graph over Bounded.smallBudget enters as a checkpointed
     // RDD leaf (distributed star loop); one at or under the gate
     // (this SF) enters as the local label relation broadcast into
     // the left join. The grid tables come from parquet scans, so

@@ -574,30 +574,24 @@ class PropertySpec extends AnyFunSuite {
     val qs = Knn.codebook(ix.e, "vec_id < 10")
     def rows(states: Seq[org.apache.spark.sql.DataFrame]) =
       states.map(_.as[(Long, Long, Double, Int)].collect().sorted.toSeq)
-    def withGate[A](g: Option[String])(f: => A): A = {
-      g.foreach(spark.conf.set("graft.v21.localMax", _))
-      try f finally spark.conf.unset("graft.v21.localMax")
-    }
-    val loc = withGate(None)(rows(Knn.v21SearchOn(ix, qs, keepAll = true)))
-    val dist = withGate(Some("0"))(
-      rows(Knn.v21SearchOn(ix, qs, keepAll = true)))
+    val loc = rows(Knn.v21SearchOn(ix, qs, keepAll = true))
+    val dist = rows(Knn.v21SearchOn(ix, qs, keepAll = true, localMax = 0L))
     assert(loc.size == dist.size, s"state counts ${loc.size} != ${dist.size}")
     loc.zip(dist).zipWithIndex.foreach { case ((l, d), i) =>
       assert(l == d, s"hop $i diverged: local ${l.take(5)}… vs dist ${d.take(5)}…")
     }
     // non-vacuity: the default-gate run must actually take the local
     // path — its states are LocalRelations, not checkpointed RDD scans
-    val lastPlan = withGate(None)(Knn.v21SearchOn(ix, qs).last
-      .queryExecution.executedPlan.toString)
+    val lastPlan = Knn.v21SearchOn(ix, qs).last
+      .queryExecution.executedPlan.toString
     assert(lastPlan.contains("LocalTableScan") &&
       !lastPlan.contains("Scan ExistingRDD"),
       s"default gate did not take the local path:\n$lastPlan")
     // fallback seams: seeds trip (gate 1) and mid-loop trip (gate at
     // the exact seed row count — hop-1 raw candidates exceed it)
-    val seedN = dist.head.size.toString
-    Seq("1", seedN).foreach { g =>
-      assert(withGate(Some(g))(
-        rows(Knn.v21SearchOn(ix, qs, keepAll = true))) == dist,
+    val seedN = dist.head.size.toLong
+    Seq(1L, seedN).foreach { g =>
+      assert(rows(Knn.v21SearchOn(ix, qs, keepAll = true, localMax = g)) == dist,
         s"gate $g fallback diverged from the distributed loop")
     }
   }
