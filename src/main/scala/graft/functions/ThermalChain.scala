@@ -202,10 +202,14 @@ object ThermalChain {
     Seq("tg3_c" -> "sqrt(sqrt(greatest(1.0, mrt_k4 - 2.5e8 * pva06 * (tg2_c - ta_c)))) - 273.15"),
     // 26
     Seq("wbgt_c" -> "0.7 * tw + 0.2 * tg3_c + 0.1 * ta_c"),
-    // 27: encode fields (main.py:256-276; offset capped at 200 values)
+    // 27: encode fields (main.py:256-276; offset capped at 200 values).
+    // The clamp bounds are DOUBLE literals: Spark's floor() returns
+    // BIGINT, and a decimal-point literal would widen the clamp to
+    // DECIMAL(21,1), one BigDecimal per row. The bounds are integers
+    // below 2^53, so the DOUBLE clamp gives the same values.
     Seq(
-      "utci_e" -> "CAST(least(1999.0, greatest(0.0, floor((utci_c + 100.0) * 10.0 + 0.5))) AS BIGINT)",
-      "wbgt_e" -> "CAST(least(1999.0, greatest(0.0, floor((wbgt_c + 100.0) * 10.0 + 0.5))) AS BIGINT)",
+      "utci_e" -> "CAST(least(1999e0, greatest(0e0, floor((utci_c + 100.0) * 10.0 + 0.5))) AS BIGINT)",
+      "wbgt_e" -> "CAST(least(1999e0, greatest(0e0, floor((wbgt_c + 100.0) * 10.0 + 0.5))) AS BIGINT)",
       "offh" -> "aoff % 200",
     ),
     // 28: the packed int32

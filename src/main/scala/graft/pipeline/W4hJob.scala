@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.ThermalChain
+import graft.functions.{Lineage, ThermalChain}
 import graft.sources.ForecastStore
 
 /** The reference container's full run (/root/reference/main.py:30-453)
@@ -72,6 +72,20 @@ object W4hJob {
   /** `nowHour` anchors the run on the aoff axis (the reference uses
     * `pd.Timestamp.utcnow()`); -1 derives it from the new forecast's
     * first hour + 1 — "the run happens as the new forecast lands".
+    *
+    * The aggregated thermal grid is materialized once, with an eager
+    * `localCheckpoint()`, before anything reads it. Otherwise the
+    * anchor's `min(aoff)` would be a second scan of the events
+    * through the whole chain, and every later stage whose lineage
+    * holds the grid's aggregate (merge + cache fill, docs, daily
+    * extremes, store write) would ship the 30-layer thermal plan in
+    * its task binary (`HashAggregateExec` keeps a reference to its
+    * plan). The trade-off: checkpoint blocks live only on the
+    * executors that computed them, so on a cluster a lost executor
+    * after the checkpoint fails the run instead of recomputing the
+    * grid. `Alert.fail` fires, the lock is released and the next
+    * cycle retries. The blocks are freed in the `finally` with
+    * `Lineage.freeCheckpoint`, since `Dataset.unpersist` skips them.
     */
   def run(spark: SparkSession, dir: String, workRoot: String,
       sourceVersion: String, nowHour: Long = -1L): Summary = {
@@ -79,16 +93,19 @@ object W4hJob {
     val last = status.fetch().get("latestSuccessfulUpdateSource")
     if (last.contains(sourceVersion)) return Summary("already-current")
     if (!status.tryAcquireUpdateLock()) return Summary("locked")
+    var grid: DataFrame = null
     var cached: DataFrame = null
     try {
       import spark.implicits._
       val timer = new Timer
 
-      // ---- compute thermal indices + encoded series (main.py:77-207)
-      val grid = ThermalChain.df(spark, dir, ThermalChain.full)
+      // ---- compute thermal indices + encoded series (main.py:77-207),
+      // materialized once (why: `run`'s scaladoc)
+      grid = ThermalChain.df(spark, dir, ThermalChain.full)
         .groupBy($"lat", $"lon", $"aoff")
         .agg(max($"tmp2m").as("tmp2m"), max($"utci_c").as("utci_c"),
           max($"wbgt_c").as("wbgt_c"), max($"encoded").as("encoded"))
+        .localCheckpoint()
 
       // ---- time anchors + merge over the previous run (main.py:219-250)
       val minNewAoff = grid.agg(min($"aoff")).head().getLong(0)
@@ -133,9 +150,9 @@ object W4hJob {
       timer.log("uploaded forecast documents")
 
       // ---- hour-angle shift + daily extremes + contour bands (main.py:341-443)
-      // aggregated ONCE: the day list and the PNG raster read the
-      // written chart parquet back instead of re-running the
-      // (lat, lon, lday) aggregation over `merged`
+      // aggregated ONCE: the day count is an observed metric of the
+      // write, and the PNG raster reads the written chart parquet back
+      // instead of re-running the (lat, lon, lday) aggregation
       val chartsPath = s"$workRoot/charts/$sourceVersion"
       val daily = merged
         .withColumn("uha", expr("CASE WHEN CAST(floor(lon / 15.0 + 0.5) AS BIGINT) > 12" +
@@ -144,10 +161,11 @@ object W4hJob {
         .withColumn("lday", expr("CAST(floor(CAST(aoff + uha AS DOUBLE) / 24.0) AS BIGINT)"))
         .groupBy($"lat", $"lon", $"lday")
         .agg(max($"utci_c").as("hi"), min($"utci_c").as("lo"))
-      daily.write.mode("overwrite").parquet(chartsPath)
+      val days = new org.apache.spark.sql.Observation()
+      daily.observe(days, size(collect_set($"lday")).as("n"))
+        .write.mode("overwrite").parquet(chartsPath)
+      val chartDays = days.get("n").asInstanceOf[Int]
       val charts = spark.read.schema(daily.schema).parquet(chartsPath)
-      val chartDays = charts.select($"lday").distinct()
-        .as[Long].collect().sorted
       // ---- PNG rendering + chart catalog (main.py:399-443): the
       // reference's fig.savefig becomes a JDK ImageIO raster of the
       // banded field. Every chart is encoded in one distributed pass
@@ -178,16 +196,17 @@ object W4hJob {
       // ---- persist + bookkeeping (main.py:326-336)
       store.save(merged, sourceVersion)
       status.set("latestSuccessfulUpdateSource", sourceVersion)
-      Summary("completed", mergedRows, uploadedDocs, chartDays.length)
+      Summary("completed", mergedRows, uploadedDocs, chartDays)
     } catch {
       // the reference texts the admin then re-raises (utils.py:15-30).
       // NonFatal only: interrupts / fatal JVM errors propagate as-is.
       case scala.util.control.NonFatal(e) =>
         Alert.fail(s"ETL: update $sourceVersion failed: ${e.getMessage}", e)
     } finally {
-      // release the cache on BOTH paths — a failed run must not leak
-      // the cached merge until session end
+      // release the cache and the grid's checkpoint on BOTH paths — a
+      // failed run must not leak them until session end
       if (cached != null) cached.unpersist()
+      if (grid != null) Lineage.freeCheckpoint(grid)
       status.releaseUpdateLock()
     }
   }

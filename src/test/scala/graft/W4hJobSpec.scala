@@ -56,6 +56,82 @@ class W4hJobSpec extends AnyFunSuite {
     finally status.releaseUpdateLock()
   }
 
+  /** Runs `f` and returns its outcome with the records read by each
+    * completed stage that scans files (stages that only read cached
+    * or checkpointed blocks are left out). A marker job run after `f`
+    * drains the in-order listener queue.
+    */
+  private def withFileScanReads[T](f: => T): (scala.util.Try[T], Seq[Long]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    val sc = spark.sparkContext
+    val tag = "graft.spec.marker"
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          reads.add(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = scala.util.Try(f)
+      sc.setLocalProperty(tag, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tag, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      (out, reads.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one run scans the events once: the thermal grid is materialized before the anchor") {
+    import java.nio.file.{Files, Paths}
+    // every event three times: the other files the run reads, `part`
+    // and the chart parquet (at most one row per distinct cell-hour,
+    // scanned at most twice by one stage), then give every other
+    // stage fewer records, so a stage that reads exactly nEvents
+    // records is an events scan
+    val data = Files.createTempDirectory("w4h_data")
+    val ev = Tables.load(spark, sf, "events")
+    ev.union(ev).union(ev).write.parquet(s"$data/events.parquet")
+    Files.createSymbolicLink(data.resolve("part.parquet"), Paths.get(s"$sf/part.parquet"))
+    val nEvents = 3 * ev.count()
+    val root = Files.createTempDirectory("w4h_scan").toString
+    val (r, reads) = withFileScanReads(W4hJob.run(spark, data.toString, root, "gfs20240101_00z"))
+    assert(r.get.outcome == "completed")
+    // the anchor, merge, docs, charts and store write all read the
+    // materialized grid, so exactly one stage scans the events
+    assert(reads.count(_ == nEvents) == 1,
+      s"expected one stage reading the $nEvents events; file-scan stage reads: $reads")
+  }
+
+  test("a completed or failed run leaves nothing persisted and the lock released") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ok = java.nio.file.Files.createTempDirectory("w4h_life").toString
+    assert(W4hJob.run(spark, sf, ok, "gfs20240101_00z").outcome == "completed")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"a completed run left persisted RDDs: ${sc.getPersistentRDDs.keySet -- before}")
+    assert(new StatusStore(ok).fetch()("isUpdating") == "false")
+
+    // `uploads` as a plain file fails the run at the upload step,
+    // after the grid is checkpointed and the merge is cached
+    val bad = java.nio.file.Files.createTempDirectory("w4h_fail").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(bad, "uploads"), Array[Byte](1))
+    val nEvents = Tables.events(spark, sf).count()
+    val (r, reads) = withFileScanReads(W4hJob.run(spark, sf, bad, "gfs20240101_00z"))
+    assert(r.isFailure && r.failed.get.getMessage.contains("failed"))
+    assert(r.failed.get.getCause.isInstanceOf[java.nio.file.FileSystemException])
+    assert(reads.contains(nEvents), s"the run failed before the grid was computed: $reads")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"a failed run left persisted RDDs: ${sc.getPersistentRDDs.keySet -- before}")
+    val st = new StatusStore(bad).fetch()
+    assert(st("isUpdating") == "false")
+    assert(!st.contains("latestSuccessfulUpdateSource"))
+  }
+
   test("time anchors follow main.py:219-243 on the hour axis") {
     // now=100h, new data from hour 0: forecasts need floor_day(75)=72,
     // charts need floor_day(0)-12=-12 -> the chart term dominates
