@@ -15,6 +15,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * Non-blocking on purpose: the caller has already materialized the
   * next round's state, so reclamation can proceed asynchronously.
+  *
+  * Round loops over one DataFrame get this from [[Iterate]], which
+  * owns the checkpoint → step → free order; direct callers are the
+  * loops that stay hand-written and the one-off checkpoints outside
+  * loops.
   */
 object Lineage {
   def freeCheckpoint(df: DataFrame): Unit =

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Bounded
+import graft.functions.{Bounded, Iterate}
 
 /** Deduplication operators over `documents` (SURVEY.md §2 d1-d5).
   *
@@ -570,45 +570,48 @@ object Dedup {
 
   def d6(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // edges: seeded exact copies (x ~ x+10000) and near-dups chained
-    // (x ~ x+20000 for doc_id % 14 == 0) to force >2-node components
+    components(d6Edges(spark, dir).cache())
+      .groupBy($"lbl".as("component"))
+      .agg(count(lit(1)).as("size"), min($"id").as("canonical_id"))
+      .transform(graft.Tables.ordered(_, $"component"))
+  }
+
+  /** d6's seeded pair graph (src, dst): exact copies (x ~ x+10000)
+    * and near-dups chained (x ~ x+20000 for doc_id % 14 == 0) to
+    * force >2-node components.
+    */
+  private[graft] def d6Edges(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val docs = Tables.documents(spark, dir).select($"doc_id")
     val e1 = docs.filter($"doc_id" % 7 === 0)
       .select($"doc_id".as("src"), ($"doc_id" + 10000).as("dst"))
     val e2 = docs.filter($"doc_id" % 14 === 0)
       .select(($"doc_id" + 10000).as("src"), ($"doc_id" + 20000).as("dst"))
-    val edges = e1.unionByName(e2).cache()
-    // `graft.cc.algo = stars` switches to the O(log n)-round
-    // large-star/small-star contraction for pathological diameters;
-    // the default min-label propagation costs diameter rounds (fine
-    // for near-dup graphs, whose components are short copy chains).
-    // NO SILENT CAPS: a propagation that hits its round budget
-    // without converging would return partially-merged components,
-    // so it falls back to the contraction (which converges in log
-    // rounds regardless of diameter); a stars cap-out is a hard
-    // error, never a wrong answer.
-    val labels =
-      if (spark.conf.getOption("graft.cc.algo").contains("stars")) {
-        val (l, _, conv) = ccStars(edges, 50)
-        require(conv, "ccStars did not converge within 50 rounds")
-        l
-      } else ccPropagate(edges, 20) match {
-        case (l, _, true) => l
-        case _ =>
-          val (l, _, conv) = ccStars(edges, 50)
-          require(conv, "ccStars fallback did not converge within 50 rounds")
-          l
-      }
-    labels.groupBy($"lbl".as("component"))
-      .agg(count(lit(1)).as("size"), min($"id").as("canonical_id"))
-      .transform(graft.Tables.ordered(_, $"component"))
+    e1.unionByName(e2)
   }
+
+  /** Connected components (id, lbl) of a dup-pair edge list: min-label
+    * propagation (diameter rounds — short copy chains) with a 20-round
+    * budget. NO SILENT CAPS: a propagation that hits it has its labels
+    * freed and the log-round star contraction runs instead; a stars
+    * cap-out is a hard error, never a wrong answer.
+    */
+  private[graft] def components(edges: DataFrame,
+      localMax: Long = Bounded.smallBudget): DataFrame =
+    ccPropagate(edges, 20, localMax) match {
+      case (l, _, true) => l
+      case (l, _, false) =>
+        graft.functions.Lineage.freeCheckpoint(l)
+        val (s, _, conv) = ccStars(edges, 50, localMax)
+        require(conv, "ccStars fallback did not converge within 50 rounds")
+        s
+    }
 
   /** Min-label propagation over an undirected edge list (src, dst):
     * each round is one shuffle; rounds needed = component DIAMETER.
-    * Convergence-detected — the per-round existence check is a
-    * limit(1) action, not a full count. Returns (labels(id, lbl),
-    * rounds run, converged).
+    * Convergence-detected through [[Iterate.untilStable]]: the
+    * per-round change count rides the round's checkpoint job.
+    * Returns (labels(id, lbl), rounds run, converged).
     */
   private[graft] def ccPropagate(edges: DataFrame, maxRounds: Int,
       localMax: Long = Bounded.smallBudget): (DataFrame, Int, Boolean) = {
@@ -647,47 +650,23 @@ object Dedup {
     }
     val nodes = edges.select($"src".as("id"))
       .unionByName(edges.select($"dst".as("id"))).distinct()
-    // localCheckpoint (EAGER) per round, not cache(): each round's
-    // plan references the prior labels twice (the union feed and the
-    // convergence join), so the logical plan doubles per round —
-    // §8.19's analyzer blow-up. Cutting lineage makes the fallback
-    // contract real: a 15-round-diameter component now reaches the
-    // 20-round budget instead of dying in the analyzer at ~7.
-    var labels = nodes.withColumn("lbl", $"id").localCheckpoint()
     val und = edges.unionByName(edges.select($"dst".as("src"), $"src".as("dst"))).cache()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      // round 19 (guide §2.6): the neighbor-min is aggregated ALONE
-      // and joined back onto the labels (least() == the old
-      // union-then-min, since least skips NULLs), which exposes the
-      // per-id "changed" bit (vmin < lbl) INSIDE the round's plan —
-      // so the convergence probe rides the checkpoint job as an
-      // observed sum instead of paying a join + limit-scan job per
-      // round. Same labels, same round count, same converged flag.
+    // the neighbor-min is aggregated ALONE and joined back onto the
+    // labels (least() == union-then-min, since least skips NULLs),
+    // which exposes the per-id "changed" bit (vmin < lbl) inside the
+    // round's plan for the observed change count
+    val out = Iterate.untilStable(nodes.withColumn("lbl", $"id"), maxRounds,
+        sum(when($"chg", 1L).otherwise(0L))) { labels =>
       val viaEdge = und.join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .select($"dst".as("id"), $"lbl".as("vlbl"))
-      val obs = new org.apache.spark.sql.Observation()
-      val next = labels
+      labels
         .join(viaEdge.groupBy($"id").agg(min($"vlbl").as("vmin")),
           Seq("id"), "left_outer")
         .select($"id", least($"lbl", $"vmin").as("lbl"),
           ($"vmin" < $"lbl").as("chg"))
-        .observe(obs, sum(when($"chg", 1L).otherwise(0L)).as("chgs"))
-        .select($"id", $"lbl")
-        .localCheckpoint()
-      converged = !obs.get.get("chgs").exists {
-        case null => false
-        case n => n.asInstanceOf[Long] > 0L
-      }
-      // RDD-level free — Dataset.unpersist() cannot see a
-      // localCheckpoint (see graft.functions.Lineage)
-      graft.functions.Lineage.freeCheckpoint(labels)
-      labels = next
-      rounds += 1
     }
     und.unpersist()
-    (labels, rounds, converged)
+    out
   }
 
   /** The driver-side twin of [[ccStars]]'s round loop: the SAME
@@ -775,7 +754,8 @@ object Dedup {
     // localCheckpoint (eager) per round: the alternating
     // union/join/distinct multiplies the LOGICAL plan ~8× per round,
     // so lineage must be cut — cache() alone leaves an exponentially
-    // growing plan for the analyzer.
+    // growing plan for the analyzer. Hand-written, not Iterate: it converges
+    // on a fingerprint compare, and its round-0 row count picks the local path.
     val (e0, sig0) = sigObs(canon(edges.select($"src".as("a"), $"dst".as("b"))))
     var e = e0
     var curSig = sig0()
@@ -833,8 +813,6 @@ object Dedup {
       val (en, nSigF) = sigObs(canon(small))
       val nSig = nSigF()
       converged = nSig == curSig
-      // RDD-level free — Dataset.unpersist() cannot see a
-      // localCheckpoint (see graft.functions.Lineage)
       graft.functions.Lineage.freeCheckpoint(e)
       e = en
       curSig = nSig
@@ -1374,15 +1352,7 @@ object Dedup {
   def d13Apply(verifiedPairs: DataFrame): DataFrame = {
     val spark = verifiedPairs.sparkSession
     import spark.implicits._
-    val pairs = verifiedPairs.localCheckpoint()
-    val labels = ccPropagate(pairs, 20) match {
-      case (l, _, true) => l
-      case _ =>
-        val (l, _, conv) = ccStars(pairs, 50)
-        require(conv, "ccStars fallback did not converge within 50 rounds")
-        l
-    }
-    labels.select($"id".as("doc_id"), $"lbl".as("root"))
+    components(verifiedPairs.localCheckpoint()).select($"id".as("doc_id"), $"lbl".as("root"))
       .withColumn("kept", ($"doc_id" === $"root").cast("long"))
       .transform(graft.Tables.ordered(_, $"doc_id"))
   }

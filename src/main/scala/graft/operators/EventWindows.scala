@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.Bounded
+import graft.functions.{Bounded, Iterate}
 
 /** Event-time window analytics over the `events` table — the batch
   * counterparts of the streaming queries in [[graft.streaming]].
@@ -1187,16 +1187,12 @@ object EventWindows {
       // fixpoint is bitwise the local path's on any input
       val states = m.select($"prev_type".as("state")).distinct()
       val nStates = states.count()
-      var pi = states
+      val uniform = states
         .selectExpr("state", s"CAST(1000000 div $nStates AS BIGINT) AS mass")
-        .localCheckpoint()
-      (1 to e19Rounds).foreach { _ =>
-        val next = m.join(pi.withColumnRenamed("state", "prev_type"), Seq("prev_type"))
+      val pi = Iterate.fixed(uniform, e19Rounds) { (pi, _) =>
+        m.join(pi.withColumnRenamed("state", "prev_type"), Seq("prev_type"))
           .selectExpr("event_type AS state", "(mass * n) div rowsum AS part")
           .groupBy($"state").agg(sum($"part").as("mass"))
-          .localCheckpoint()
-        graft.functions.Lineage.freeCheckpoint(pi)
-        pi = next
       }
       pi.join(m.groupBy($"prev_type".as("state")).agg(count(lit(1)).as("n_out")),
           Seq("state"))
@@ -1378,19 +1374,15 @@ object EventWindows {
     val spark = m.sparkSession
     import spark.implicits._
     val transient = m.select($"scen", $"s").distinct()
-    var x = transient.withColumn("x", lit(0L)).localCheckpoint()
-    (1 to e20Rounds).foreach { _ =>
+    val x = Iterate.fixed(transient.withColumn("x", lit(0L)), e20Rounds) { (x, _) =>
       val xAll = x.unionByName(
         scens.selectExpr("scen", "'purchase' AS s", "CAST(1000000 AS BIGINT) AS x"))
       // NULL-state x = 0: absent rows contribute nothing via inner join
       val next = m.join(xAll.withColumnRenamed("s", "t"), Seq("scen", "t"))
         .selectExpr("scen", "s", "(x * n) div rowsum AS part")
         .groupBy($"scen", $"s").agg(sum($"part").as("xn"))
-      val nx = transient.join(next, Seq("scen", "s"), "left_outer")
+      transient.join(next, Seq("scen", "s"), "left_outer")
         .selectExpr("scen", "s", "coalesce(xn, CAST(0 AS BIGINT)) AS x")
-        .localCheckpoint()
-      graft.functions.Lineage.freeCheckpoint(x)
-      x = nx
     }
     e20Finish(x)
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.Bounded
+import graft.functions.{Bounded, Iterate}
 
 /** Graph centrality for crawl curation (SURVEY.md §2 g1): large-scale
   * corpus pipelines rank hosts/pages by link centrality to prioritize
@@ -39,11 +39,9 @@ object Graph {
     * deg(u) per out-edge; next(v) = base + Σ in-shares with base =
     * (S·15/100) div N. Scale shape: one edges⋈rank equality join +
     * one dst aggregate per round (map-side partial), rank state
-    * localCheckpoint'd per round and freed via
-    * [[graft.functions.Lineage.freeCheckpoint]] — the q27/d6
-    * iterative contract. At 100 TB, edges co-partition by src across
-    * rounds so the join reuses one partitioning; the dst aggregate
-    * is the only other exchange.
+    * lineage-cut per round by [[graft.functions.Iterate]]. At 100 TB,
+    * edges co-partition by src across rounds so the join reuses one
+    * partitioning; the dst aggregate is the only other exchange.
     */
   def g1(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -59,18 +57,14 @@ object Graph {
       .join(edges.groupBy($"src").agg(count(lit(1)).as("deg")), Seq("src"))
       .cache()
     val base = (massS * 15L / 100L) / n
-    var rank = nodes.withColumn("r", lit(massS / n)).localCheckpoint()
-    (1 to g1Rounds).foreach { _ =>
+    val rank = Iterate.fixed(nodes.withColumn("r", lit(massS / n)), g1Rounds) { (rank, _) =>
       val contrib = linked
         .join(rank.withColumnRenamed("id", "src"), Seq("src"))
         .selectExpr("dst", "((r * 85) div 100) div deg AS share")
         .groupBy($"dst").agg(sum($"share").as("m"))
-      val next = nodes
+      nodes
         .join(contrib.withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
         .selectExpr("id", s"CAST($base AS BIGINT) + coalesce(m, CAST(0 AS BIGINT)) AS r")
-        .localCheckpoint()
-      graft.functions.Lineage.freeCheckpoint(rank)
-      rank = next
     }
     linked.unpersist(blocking = false)
     rank.select($"id".as("c_custkey"), $"r".as("rank_mass"))
@@ -99,10 +93,10 @@ object Graph {
     *
     * Scale shape per half-step: one edges⋈state equality join + one
     * dst (resp. src) partial aggregate + a 1-row total broadcast;
-    * state localCheckpoint'd per round and freed
-    * ([[graft.functions.Lineage.freeCheckpoint]]) — the q27/d6/g1
-    * iterative contract. Edges co-partition by the join side across
-    * rounds, so a cluster reuses one exchange per direction.
+    * state lineage-cut per round (the [[graft.functions.Iterate]]
+    * contract, written out for two frames). Edges co-partition by
+    * the join side across rounds, so a cluster reuses one exchange
+    * per direction.
     */
   def g2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -125,6 +119,7 @@ object Graph {
         .crossJoin(broadcast(total))
         .selectExpr("id", s"coalesce(raw, CAST(0 AS BIGINT)) div q AS $outCol")
     }
+    // hand-written, not Iterate: two frames (auth, hub) step per round
     var auth = nodes.withColumn("a", lit(massS / n)).localCheckpoint()
     var hub = nodes.withColumn("h", lit(massS / n)).localCheckpoint()
     (1 to g2Rounds).foreach { _ =>
@@ -539,20 +534,15 @@ object Graph {
       rounds: Int): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    var labels = nodes.withColumn("lbl", $"id").localCheckpoint()
-    (1 to rounds).foreach { _ =>
+    Iterate.fixed(nodes.withColumn("lbl", $"id"), rounds) { (labels, _) =>
       val votes = edges.join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy($"dst", $"lbl").agg(count(lit(1)).as("c"))
       val winner = votes.groupBy($"dst")
         .agg(min(struct(($"c" * -1).as("nc"), $"lbl")).as("w"))
         .selectExpr("dst AS id", "w.lbl AS wlbl")
-      val next = labels.join(winner, Seq("id"), "left_outer")
+      labels.join(winner, Seq("id"), "left_outer")
         .selectExpr("id", "coalesce(wlbl, lbl) AS lbl")
-        .localCheckpoint()
-      graft.functions.Lineage.freeCheckpoint(labels)
-      labels = next
     }
-    labels
   }
 
   // ---------- g7: k-core peeling ----------
@@ -638,6 +628,7 @@ object Graph {
     // fewer per sweep. A node's pr freezes at the sweep that removed
     // it, so the final frame IS the old nodes ⟕ peelAll union —
     // bitwise-identical output.
+    // hand-written, not Iterate: two frames (st, ed) step per sweep
     var st = nodes.withColumn("pr", lit(0L)).localCheckpoint()
     var ed = und.localCheckpoint()
     (1 to rounds).foreach { i =>
@@ -755,22 +746,19 @@ object Graph {
     require(nseed > 0, "g8 seed set is empty")
     val base = (massS * 15L / 100L) / nseed
     val init = massS / nseed
-    var rank = nodes.selectExpr("id",
+    val seeded = nodes.selectExpr("id",
       s"CASE WHEN id % $g8SeedMod = 0 THEN CAST($init AS BIGINT) " +
-        s"ELSE CAST(0 AS BIGINT) END AS r").localCheckpoint()
-    (1 to g8Rounds).foreach { _ =>
+        s"ELSE CAST(0 AS BIGINT) END AS r")
+    val rank = Iterate.fixed(seeded, g8Rounds) { (rank, _) =>
       val contrib = linked
         .join(rank.withColumnRenamed("id", "src"), Seq("src"))
         .selectExpr("dst", "((r * 85) div 100) div deg AS share")
         .groupBy($"dst").agg(sum($"share").as("m"))
-      val next = nodes
+      nodes
         .join(contrib.withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
         .selectExpr("id",
           s"CASE WHEN id % $g8SeedMod = 0 THEN CAST($base AS BIGINT) " +
             s"ELSE CAST(0 AS BIGINT) END + coalesce(m, CAST(0 AS BIGINT)) AS r")
-        .localCheckpoint()
-      graft.functions.Lineage.freeCheckpoint(rank)
-      rank = next
     }
     linked.unpersist(blocking = false)
     rank.selectExpr("id AS c_custkey", "r AS ppr_mass",
@@ -848,19 +836,16 @@ object Graph {
       .unionAll(nodes.selectExpr("id AS src", s"(id * 17 + 3) % $n AS dst"))
       .unionAll(nodes.filter($"id" >= 2).selectExpr("id AS src", "id div 2 AS dst"))
       .cache()
-    var dist = nodes.selectExpr("id",
+    val seeds = nodes.selectExpr("id",
       s"CASE WHEN id % $g8SeedMod = 0 THEN CAST(0 AS BIGINT) " +
-        "ELSE CAST(NULL AS BIGINT) END AS d").localCheckpoint()
-    (1 to g9Rounds).foreach { _ =>
+        "ELSE CAST(NULL AS BIGINT) END AS d")
+    val dist = Iterate.fixed(seeds, g9Rounds) { (dist, _) =>
       val relax = edges
         .join(dist.filter($"d".isNotNull).withColumnRenamed("id", "src"), Seq("src"))
         .groupBy($"dst").agg((min($"d") + 1L).as("nd"))
-      val next = dist
+      dist
         .join(relax.withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
         .selectExpr("id", "least(d, nd) AS d")
-        .localCheckpoint()
-      graft.functions.Lineage.freeCheckpoint(dist)
-      dist = next
     }
     edges.unpersist(blocking = false)
     dist.selectExpr("id AS c_custkey", "CAST(coalesce(d, -1) AS BIGINT) AS depth")
@@ -966,6 +951,7 @@ object Graph {
             s"THEN ($g10M * CAST(floor(ln(CAST($g10M AS DOUBLE) / vz) * 1e9 + 0.5) AS BIGINT)) div 1000000000 " +
             s"ELSE est_raw END AS $name")
     val ests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // hand-written, not Iterate: each round keeps a side output (ests)
     (1 to g10Rounds).foreach { r =>
       val flow = edges
         .join(st.withColumnRenamed("id", "dst"), Seq("dst"))
@@ -1580,6 +1566,7 @@ object Graph {
       .unionAll(nodes.filter($"id" >= 2).selectExpr("id AS src", "id div 2 AS dst"))
       .cache()
     // forward: level-synchronous BFS with exact path counts
+    // (hand-written, not Iterate: two frames, reached and frontier)
     var reached = pivotIds.map(p => (p, p, 0L, 1L))
       .toDF("pivot", "id", "d", "sigma").localCheckpoint()
     var frontier = reached
@@ -1729,6 +1716,7 @@ object Graph {
       pivots: Int = g18Pivots): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
+    // hand-written, not Iterate: a peel may skip its step, and frees three frames
     var lab = nodes.select($"id", lit(null).cast("long").as("scc"))
       .localCheckpoint()
     (1 to peels).foreach { _ =>
@@ -1750,28 +1738,25 @@ object Graph {
         // every one of the 2×[[g18Rounds]] mask-flow joins
         val eUsrc = eU.repartition($"src").cache()
         val eUdst = eU.repartition($"dst").cache()
-        var m = un
+        val m0 = un
           .join(broadcast(pvDf), un("id") === pvDf("pid"), "left")
           .selectExpr("id",
             "CASE WHEN bit IS NOT NULL THEN shiftleft(CAST(1 AS BIGINT), bit) " +
               "ELSE CAST(0 AS BIGINT) END AS fm")
-          .withColumn("bm", $"fm").localCheckpoint()
-        (1 to rounds).foreach { _ =>
+          .withColumn("bm", $"fm")
+        val m = Iterate.fixed(m0, rounds) { (m, _) =>
           val f = eUsrc
             .join(m.filter($"fm" =!= 0L).selectExpr("id AS src", "fm"), Seq("src"))
             .groupBy($"dst").agg(expr("bit_or(fm)").as("nf"))
           val b = eUdst
             .join(m.filter($"bm" =!= 0L).selectExpr("id AS dst", "bm"), Seq("dst"))
             .groupBy($"src").agg(expr("bit_or(bm)").as("nb"))
-          val next = m
+          m
             .join(f.withColumnRenamed("dst", "id"), Seq("id"), "left")
             .join(b.withColumnRenamed("src", "id"), Seq("id"), "left")
             .selectExpr("id",
               "fm | coalesce(nf, CAST(0 AS BIGINT)) AS fm",
               "bm | coalesce(nb, CAST(0 AS BIGINT)) AS bm")
-            .localCheckpoint()
-          graft.functions.Lineage.freeCheckpoint(m)
-          m = next
         }
         eUsrc.unpersist(blocking = false)
         eUdst.unpersist(blocking = false)
@@ -1962,16 +1947,12 @@ object Graph {
       .filter($"sa" =!= $"sb")
       .select($"sa", $"sb").distinct().localCheckpoint()
     val sz = labs.groupBy($"scc").agg(count(lit(1)).as("scc_size"))
-    var lvl = sz.select($"scc", lit(0L).as("depth")).localCheckpoint()
-    (1 to g23Rounds).foreach { _ =>
+    val lvl = Iterate.fixed(sz.select($"scc", lit(0L).as("depth")), g23Rounds) { (lvl, _) =>
       val cand = cel
         .join(lvl.select($"scc".as("sa"), $"depth".as("da")), Seq("sa"))
         .groupBy($"sb".as("scc")).agg(max($"da" + 1).as("cand"))
-      val nxt = lvl.join(cand, Seq("scc"), "left")
+      lvl.join(cand, Seq("scc"), "left")
         .selectExpr("scc", "greatest(depth, coalesce(cand, CAST(0 AS BIGINT))) AS depth")
-        .localCheckpoint()
-      graft.functions.Lineage.freeCheckpoint(lvl)
-      lvl = nxt
     }
     val outd = cel.groupBy($"sa".as("scc")).agg(count(lit(1)).as("out_deg"))
     val ind = cel.groupBy($"sb".as("scc")).agg(count(lit(1)).as("in_deg"))
@@ -2147,6 +2128,7 @@ object Graph {
       wedges.join(e, Seq("a", "b"))
         .groupBy($"a", $"b").agg(count(lit(1)).as("sup"))
     }
+    // hand-written, not Iterate: e0 outlives the loop, so round 1 must not free it
     var cur = e0
     (1 to g22Rounds).foreach { _ =>
       val next = cur.join(supportOf(cur), Seq("a", "b"))
@@ -2238,6 +2220,7 @@ object Graph {
     val spark = nodes.sparkSession
     import spark.implicits._
     def closure(keyIn: String, keyOut: String): DataFrame = {
+      // hand-written, not Iterate: two frames, reach and frontier
       var reach = nodes.filter($"id" === seed).select($"id").localCheckpoint()
       var frontier = reach
       (1 to rounds).foreach { _ =>
@@ -2591,6 +2574,7 @@ object Graph {
     //     stages per round disappear.
     val edges = edgesW.cache()
     // state: (id, lbl, d) — d static per id, joined once here
+    // (hand-written, not Iterate: the keepAll audit keeps every state)
     var st = init.select($"id", $"lbl").join(degAll0, Seq("id"))
       .select($"id", $"lbl", $"d").localCheckpoint()
     val states = scala.collection.mutable.ArrayBuffer(
@@ -3005,19 +2989,15 @@ object Graph {
       // edge table ONCE (g1's discipline)
       val linked = edges.join(
         edges.groupBy($"src").agg(sum($"w").as("outw")), Seq("src")).cache()
-      var rk = comms.withColumn("r", lit(massS / nc)).localCheckpoint()
-      (1 to g1Rounds).foreach { _ =>
+      val rk = Iterate.fixed(comms.withColumn("r", lit(massS / nc)), g1Rounds) { (rk, _) =>
         val contrib = linked
           .join(rk.withColumnRenamed("id", "src"), Seq("src"))
           .selectExpr("dst", "(((r * 85) div 100) div outw) * w AS share")
           .groupBy($"dst").agg(sum($"share").as("m"))
-        val next = comms
+        comms
           .join(contrib.withColumnRenamed("dst", "id"), Seq("id"), "left_outer")
           .selectExpr("id",
             s"CAST($base AS BIGINT) + coalesce(m, CAST(0 AS BIGINT)) AS r")
-          .localCheckpoint()
-        graft.functions.Lineage.freeCheckpoint(rk)
-        rk = next
       }
       linked.unpersist(blocking = false)
       rk
@@ -3139,6 +3119,7 @@ object Graph {
     // label set). Only the per-level COMPOSITION join still touches
     // original-node grain — it is the output contract. Saves three
     // corpus-grain joins + two corpus aggs per level past 2.
+    // hand-written, not Iterate: each level keeps its labeling in `out`
     var cundPrev: DataFrame = null
     var sdegPrev: DataFrame = null
     var lNPrev: DataFrame = null

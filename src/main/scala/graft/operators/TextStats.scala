@@ -840,6 +840,7 @@ object TextStats {
       candK: Int = t17CandK): (Seq[(Int, Int, String, Long)], DataFrame) = {
     val spark = vocab0.sparkSession
     import spark.implicits._
+    // hand-written, not Iterate: it stops once a round selects no merge
     var cur = vocab0
     val rules = scala.collection.mutable.ArrayBuffer[(Int, Int, String, Long)]()
     var round = 1

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.Tables.ts
-import graft.functions.Stable
+import graft.functions.{Iterate, Stable}
 
 /** Relational/analytic core: TPC-H-shaped queries over the testdata
   * star schema. Capabilities mirrored from the reference's data
@@ -687,12 +687,14 @@ object Relational {
     * total (5 rounds covers depth 2^32). Each round is one
     * equality self-join (shuffle on ptr) — no driver-side walking,
     * no per-node iteration. Convergence-detected like [[graft
-    * .operators.Dedup.ccPropagate]]: a limit(1) existence check per
-    * round, never a full count. Late rounds concentrate pointers on
-    * the few root keys; that join-side skew is handled per round by
-    * [[graft.operators.Skew.hotKeyJoin]] — hot roots' (unique) hop
-    * rows broadcast, cold keys shuffle with a ≤ hotThreshold
-    * per-key row bound (seeded-skew spec pins equality + the bound).
+    * .operators.Dedup.ccPropagate]]: the count of moved pointers
+    * rides each round's checkpoint job ([[graft.functions.Iterate
+    * .untilStable]]), never a separate count. Late rounds
+    * concentrate pointers on the few root keys; that join-side skew
+    * is handled per round by [[graft.operators.Skew.hotKeyJoin]] —
+    * hot roots' (unique) hop rows broadcast, cold keys shuffle with a
+    * ≤ hotThreshold per-key row bound (seeded-skew spec pins equality
+    * + the bound).
     */
   def q27(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -726,48 +728,27 @@ object Relational {
       hotThreshold: Long = 100000L): (DataFrame, Int, Boolean) = {
     val spark = init.sparkSession
     import spark.implicits._
-    // localCheckpoint (EAGER) per round, not cache(): the jump join
-    // references the prior state TWICE, so the logical plan doubles
-    // per round — §8.19's analyzer blow-up. Cutting lineage keeps
-    // round N's plan constant-size, so the doc'd depth-2³² budget
-    // (~33 rounds) is actually reachable.
-    var state = init.localCheckpoint()
-    val n0 = state.count()
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
+    val n0 = init.count()
+    // the jump join reads the prior state twice (lineage cut per
+    // round, so the doc'd depth-2³² budget of ~33 rounds is
+    // reachable); `moved` rides out of the jump join itself, so the
+    // observed change count needs no second join per round
+    val out @ (state, _, _) = Iterate.untilStable(init, maxRounds,
+        sum(when($"moved", 1L).otherwise(0L))) { state =>
       val hops = state.select($"id".as("jid"), $"ptr".as("jptr"), $"dist".as("jdist"))
-      // `moved` rides out of the jump join itself, so the
-      // convergence probe is a limit(1) filter on the checkpointed
-      // result — no second join per round.
       // Late rounds concentrate ~all ptrs on the few root keys —
       // hotKeyJoin broadcasts the (unique-keyed, hence few) hot hop
       // rows and shuffle-joins only the cold remainder, so no task
       // ever receives more than hotThreshold rows of one key.
-      val obs = new org.apache.spark.sql.Observation()
-      val next = graft.operators.Skew
+      graft.operators.Skew
         .hotKeyJoin(state, hops, "ptr", "jid", hotThreshold)
         .select($"id", $"jptr".as("ptr"), ($"dist" + $"jdist").as("dist"),
           ($"jptr" =!= $"ptr").as("moved"))
-        // round 19 (guide §2.6): the probe rides the checkpoint job
-        // as an observed sum — the per-round limit-scan job is gone
-        .observe(obs, sum(when($"moved", 1L).otherwise(0L)).as("mvs"))
-        .localCheckpoint()
-      converged = !obs.get.get("mvs").exists {
-        case null => false
-        case n => n.asInstanceOf[Long] > 0L
-      }
-      // Dataset.unpersist() is a no-op on a localCheckpoint (RDD-level
-      // persist, invisible to the CacheManager) — free the blocks
-      // for real or every round's full state would pile up
-      graft.functions.Lineage.freeCheckpoint(state)
-      state = next
-      rounds += 1
     }
     require(state.count() == n0,
       s"pointer jumping lost nodes (${n0 - state.count()} of $n0): " +
         "the id set is not closed under ptr — dangling parents")
-    (state.drop("moved"), rounds, converged)
+    out
   }
 
   /** q27 oracle: the textbook recursive CTE — one parent step per

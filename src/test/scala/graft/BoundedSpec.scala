@@ -2,42 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Bounded
+import graft.SharedSpark.withJobCount
 
 /** The driver-local gate every bounded-local twin goes through. */
 class BoundedSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
-
-  /** Runs `f` and returns its result with the number of Spark jobs it
-    * launched: the listener counts jobs tagged with a local property,
-    * and a marker job run after `f` drains the (in-order) listener
-    * queue.
-    */
-  private def withJobCount[T](f: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = "graft.spec.phase"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)) match {
-          case Some("measured") => jobs.incrementAndGet()
-          case Some("marker") => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "measured")
-      val out = try f finally sc.setLocalProperty(tag, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("Bounded.collect: Some at the budget, None one row over, one job, partition order, no conf change") {
     import spark.implicits._

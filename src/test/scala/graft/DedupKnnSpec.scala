@@ -614,14 +614,18 @@ class DedupKnnSpec extends AnyFunSuite {
       s"stage-3 removed ${rows(2)._4}, expected $expected surviving copies")
   }
 
-  test("d6 stars: flag parity with propagation; log-round chain convergence") {
-    // the stars path must produce the identical component table
-    val base = Dedup.d6(spark, sf).collect().map(_.toSeq).toSeq
-    spark.conf.set("graft.cc.algo", "stars")
-    try {
-      val stars = Dedup.d6(spark, sf).collect().map(_.toSeq).toSeq
-      assert(stars == base)
-    } finally spark.conf.unset("graft.cc.algo")
+  test("d6 stars: component parity with propagation; log-round chain convergence") {
+    // on d6's own edge set the stars contraction must produce the
+    // identical component table
+    val edges = Dedup.d6Edges(spark, sf).cache()
+    val (pl, _, pc) = Dedup.ccPropagate(edges, 20)
+    val (sl, _, sc) = Dedup.ccStars(edges, 50)
+    assert(pc && sc, s"propagation converged: $pc, stars converged: $sc")
+    val base = pl.as[(Long, Long)].collect().sorted.toSeq
+    val stars = sl.as[(Long, Long)].collect().sorted.toSeq
+    assert(base.nonEmpty)
+    assert(stars == base)
+    edges.unpersist()
     // a 64-node path graph: diameter 63, so propagation needs ~63
     // rounds while large-star/small-star contracts in O(log n)
     val n = 64
@@ -635,6 +639,41 @@ class DedupKnnSpec extends AnyFunSuite {
     // propagation within the same round budget must NOT have converged
     val (_, _, pconv) = Dedup.ccPropagate(chain, rounds)
     assert(!pconv, "propagation should need diameter rounds, not log")
+  }
+
+  test("components: a propagation that hits its round budget frees its labels before the stars fallback") {
+    // three distributed runs (localMax = -1) over path graphs whose
+    // diameters (21, 24, 30) exceed propagation's 20-round budget:
+    // each falls back to stars. A fallback that dropped the
+    // propagation's last checkpoint without freeing it would leave
+    // one persisted RDD per run behind until driver GC — three here,
+    // beyond the slack (+ 2) the deep-graphs lineage test allows.
+    // getPersistentRDDs holds its RDDs weakly, so a GC during the runs
+    // could hide a leak: every job start pins the RDDs persisted so
+    // far, and only an unpersist takes one out of the map
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val pin = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.values.foreach(pinned.add)
+    }
+    val before = sc.getPersistentRDDs.size
+    sc.addSparkListener(pin)
+    try Seq(21, 24, 30).foreach { d =>
+      val path = spark.range(0, d).selectExpr("id AS src", "id + 1 AS dst")
+      val comps = Dedup.components(path, localMax = -1L)
+      val labels = comps.as[(Long, Long)].collect()
+      assert(labels.length == d + 1 && labels.forall(_._2 == 0L),
+        s"diameter-$d path is not one component rooted at 0")
+      graft.functions.Lineage.freeCheckpoint(comps)
+    } finally {
+      SharedSpark.withJobCount(()) // drains the listener queue
+      sc.removeSparkListener(pin)
+    }
+    val after = sc.getPersistentRDDs.size
+    assert(after <= before + 2,
+      s"the stars fallback leaked persisted RDDs: $before -> $after")
   }
 
   test("d12: planted substring is recalled in every seeded doc, spans merge") {
