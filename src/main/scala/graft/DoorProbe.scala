@@ -45,19 +45,17 @@ object DoorProbe {
     // LOADS the committed artifact vs one that re-trains in-process.
     // (clearCache so the loaded store isn't served from the trainer's
     // cached scans — the cold-start number is the honest one.)
-    val root = java.nio.file.Files.createTempDirectory("graft_doorprobe_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = graft.store.Versioned.tempRoot("graft_doorprobe_")
     val t2 = System.nanoTime()
     val ix0 = graft.operators.Knn.v21Static(spark, dir)
-    graft.operators.Knn.saveIndexVersion(ix0, root.getAbsolutePath)
+    graft.operators.Knn.saveIndexVersion(ix0, root)
     ix0.reps.unpersist()
     println(f"[door] s43 trainer: build + publish v1: ${(System.nanoTime() - t2) / 1e9}%.1f s")
     spark.catalog.clearCache()
     val t3 = System.nanoTime()
     graft.operators.Knn.indexBuilds.set(0L)
     val st2 = graft.streaming.EventStreams
-      .annDeleteStateFromStore(spark, dir, root.getAbsolutePath)
+      .annDeleteStateFromStore(spark, dir, root)
     println(f"[door] s43 serving bootstrap (loadIndex + corpus count): ${(System.nanoTime() - t3) / 1e9}%.1f s, indexBuilds=${graft.operators.Knn.indexBuilds.get}")
     val t4 = System.nanoTime()
     val out2 = graft.streaming.EventStreams

@@ -50,42 +50,6 @@ object Incremental {
 
   // ---------- p10: incremental view maintenance for JOINS ----------
 
-  /** Recursive delete for the operators' temp store directories.
-    * p16 deletes EAGERLY in a finally (its result rows are collected
-    * to the driver before the DataFrame is built); p10/p11 return
-    * DataFrames that lazily READ their store, so those directories
-    * are reclaimed by a JVM shutdown hook instead of accumulating in
-    * the system temp dir across runs.
-    */
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val cs = f.listFiles(); if (cs != null) cs.foreach(deleteRecursively)
-    f.delete(); ()
-  }
-  /** ONE shutdown hook for the whole JVM, draining a concurrent
-    * queue — registering a hook per invocation would accumulate
-    * threads unboundedly across a multi-hundred-query bench. The
-    * lazy registration itself can race shutdown: if the FIRST
-    * temp-dir creation happens while the JVM is already going down,
-    * `addShutdownHook` throws IllegalStateException — caught here,
-    * and [[cleanupOnExit]] falls back to deleting immediately (the
-    * run is ending anyway, nothing will read the store). */
-  private val pendingCleanup =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
-  private lazy val cleanupHookRegistered: Boolean =
-    try {
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        var f = pendingCleanup.poll()
-        while (f != null) { deleteRecursively(f); f = pendingCleanup.poll() }
-      }, "graft-tmp-clean"))
-      true
-    } catch { case _: IllegalStateException => false }
-  private[graft] def cleanupOnExit(f: java.io.File): Unit = {
-    if (cleanupHookRegistered) pendingCleanup.add(f)
-    else deleteRecursively(f)
-    ()
-  }
-
-
   /** p10: INCREMENTAL VIEW MAINTENANCE of a join view — p3's
     * partial-merge argument extended from aggregates to JOINS, the
     * other half of what a materialized-view refresh needs: for an
@@ -129,10 +93,8 @@ object Incremental {
     // yesterday's refresh: materialize the base view ONCE (atomic
     // version swap), then discard its plan — the refresh below can
     // only get base rows by READING the store
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft_p10_store_").toFile
-    cleanupOnExit(storeDir)
-    val store = new graft.sources.ForecastStore(storeDir.getAbsolutePath)
+    val store = new graft.sources.ForecastStore(
+      graft.store.Versioned.tempRoot("graft_p10_store_"))
     store.save(viewOf(li.filter($"l_orderkey" % 10 =!= 0)), "v0")
     // today's refresh: stored view scan ∪ (Δfact ⋈ dim)
     val base = store.load(spark).get
@@ -187,10 +149,8 @@ object Incremental {
     val ords = Tables.orders(spark, dir).selectExpr("o_orderkey",
       "CAST(floor(o_totalprice * 1e2 + 0.5) AS BIGINT) AS total_cents",
       "o_orderdate")
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft_p11_store_").toFile
-    cleanupOnExit(storeDir)
-    val store = new graft.sources.ForecastStore(storeDir.getAbsolutePath)
+    val store = new graft.sources.ForecastStore(
+      graft.store.Versioned.tempRoot("graft_p11_store_"))
     store.save(ords.filter($"o_orderdate" < lit(ts("1997-01-01")))
       .drop("o_orderdate"), "v0")
     store.save(ords.filter($"o_orderdate" < lit(ts("1999-01-01")))
@@ -232,10 +192,10 @@ object Incremental {
     val ords = Tables.orders(spark, dir).selectExpr("o_orderkey",
       "CAST(floor(o_totalprice * 1e2 + 0.5) AS BIGINT) AS total_cents",
       "o_orderdate")
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft_p16_store_").toFile
+    val files = graft.store.Versioned(
+      graft.store.Versioned.tempRoot("graft_p16_store_"))
     try {
-      val store = new graft.sources.ForecastStore(storeDir.getAbsolutePath)
+      val store = new graft.sources.ForecastStore(files)
       store.save(ords.filter($"o_orderdate" < lit(ts("1997-01-01")))
         .drop("o_orderdate"), "v0")
       store.save(ords.filter($"o_orderdate" < lit(ts("1999-01-01")))
@@ -264,7 +224,7 @@ object Incremental {
       rows.toDF("version", "is_current", "n_orders", "sum_cents",
           "status", "load_ok")
         .transform(Tables.ordered(_, $"version"))
-    } finally deleteRecursively(storeDir)
+    } finally files.delete("")
   }
 
 
@@ -280,7 +240,7 @@ object Incremental {
     * Detection needs a SOURCE OF TRUTH for "referenced": a directory
     * listing cannot tell a committed file from a leftover, so
     * [[graft.sources.ForecastStore.save]] now writes a per-version
-    * `_MANIFEST` (the sorted committed data files — the Iceberg
+    * manifest (the sorted committed data files — the Iceberg
     * manifest role), and
     * [[graft.sources.ForecastStore.orphans]] diffs the listing
     * against it (metadata-only — no data file is read; an unlisted
@@ -306,26 +266,19 @@ object Incremental {
     val ords = Tables.orders(spark, dir).selectExpr("o_orderkey",
       "CAST(floor(o_totalprice * 1e2 + 0.5) AS BIGINT) AS total_cents",
       "o_orderdate")
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft_p17_store_").toFile
+    val files = graft.store.Versioned(
+      graft.store.Versioned.tempRoot("graft_p17_store_"))
     try {
-      val store = new graft.sources.ForecastStore(storeDir.getAbsolutePath)
+      val store = new graft.sources.ForecastStore(files)
       store.save(ords.filter($"o_orderdate" < lit(ts("1997-01-01")))
         .drop("o_orderdate"), "v0")
       store.save(ords.filter($"o_orderdate" < lit(ts("1999-01-01")))
         .drop("o_orderdate"), "v1")
       store.save(ords.drop("o_orderdate"), "v2")
       // plant the three orphan classes
-      val root = storeDir.toPath
-      java.nio.file.Files.write(
-        root.resolve("v1").resolve("part-00099-leftover.parquet.tmp"),
-        "failed task attempt".getBytes)
-      val tmpTree = root.resolve("v2").resolve("_temporary").resolve("0")
-      java.nio.file.Files.createDirectories(tmpTree)
-      java.nio.file.Files.write(tmpTree.resolve("task_attempt.bin"),
-        Array.fill(16)(0x5a.toByte))
-      java.nio.file.Files.write(root.resolve("stale_export.csv"),
-        "id,cents\n1,100\n".getBytes)
+      files.replace("v1/part-00099-leftover.parquet.tmp", "failed task attempt")
+      files.replace("v2/_temporary/0/task_attempt.bin", "Z" * 16)
+      files.replace("stale_export.csv", "id,cents\n1,100\n")
       // pre-reclaim stats per version (committed data only)
       val pre = store.versions().map { case (v, _) =>
         val r = store.loadVersion(spark, v).get
@@ -334,7 +287,7 @@ object Incremental {
       }
       val removed = store.removeOrphans().toSet
       val orphanRows = removed.toSeq.sorted.map { rel =>
-        val gone = !java.nio.file.Files.exists(root.resolve(rel))
+        val gone = !files.exists(rel)
         (rel, "orphan", "removed", -1L, -1L, if (gone) 1L else 0L)
       }
       val versionRows = pre.map { case (v, n, c) =>
@@ -348,7 +301,7 @@ object Incremental {
       (orphanRows ++ versionRows)
         .toDF("item", "kind", "status", "n_orders", "sum_cents", "intact")
         .transform(Tables.ordered(_, $"item"))
-    } finally deleteRecursively(storeDir)
+    } finally files.delete("")
   }
 
   /** p17 oracle: the three planted orphans (constants — removal is
@@ -455,10 +408,10 @@ object Incremental {
     val ords = Tables.orders(spark, dir).selectExpr("o_orderkey",
       "CAST(floor(o_totalprice * 1e2 + 0.5) AS BIGINT) AS total_cents",
       "o_orderdate")
-    val storeDir = java.nio.file.Files
-      .createTempDirectory("graft_p18_store_").toFile
+    val files = graft.store.Versioned(
+      graft.store.Versioned.tempRoot("graft_p18_store_"))
     try {
-      val store = new graft.sources.ForecastStore(storeDir.getAbsolutePath)
+      val store = new graft.sources.ForecastStore(files)
       val clean = ords.filter($"o_orderdate" < lit(ts("1997-01-01")))
         .drop("o_orderdate")
       store.save(clean, "v0")
@@ -493,7 +446,7 @@ object Incremental {
       Seq(before, after, forensic)
         .toDF("phase", "version", "n_rows", "n_bad", "sum_cents")
         .transform(Tables.ordered(_, $"phase"))
-    } finally deleteRecursively(storeDir)
+    } finally files.delete("")
   }
 
   /** p18 oracle: the three audits recomputed from orders arithmetic

@@ -3182,17 +3182,19 @@ object Knn {
   /** Persist a trained [[V21Static]] index to a directory: one
     * parquet dataset per component (corpus vectors, navigable
     * graph, entry representatives, the bounded coarse codebook) and
-    * a _MANIFEST recording each component's exact row count — the
-    * commit marker that makes the load COMMITTED-READ (the
-    * ForecastStore discipline): a partially written or tampered
-    * store can't be served from silently. */
-  private[graft] def saveIndex(ix: V21Static, dir: String): Unit = {
+    * a manifest recording each component's exact row count — the
+    * commit marker that makes the load COMMITTED-READ: a partially
+    * written or tampered store can't be served from silently. */
+  private[graft] def saveIndex(ix: V21Static, dir: String): Unit =
+    graft.store.Versioned(dir).commit("")(writeIndex(ix, _))
+
+  /** Write `ix`'s components under `dir`; returns the manifest lines. */
+  private def writeIndex(ix: V21Static, dir: String): Seq[String] = {
     val spark = ix.e.sparkSession
     import spark.implicits._
     // the four component writes are independent (distinct paths) and
     // each is far too small to fill the cluster — land them
-    // concurrently (guide §2.6 job overlap); the manifest still
-    // commits LAST, after every write has returned. The manifest
+    // concurrently (guide §2.6 job overlap). The manifest
     // counts RIDE the writes as observed metrics (round 19): the
     // r18 shape recomputed each component's plan to count it (a
     // second full pass per publish for an uncached frame); the
@@ -3210,14 +3212,9 @@ object Knn {
         .observe(obss(2), count(lit(1)).as("n")).write.parquet(s"$dir/reps"),
       () => ix.cents.toSeq.toDF("cid", "cv").write.parquet(s"$dir/cents")))
     val Seq(nv, ng, nr) = obss.map(_.get("n").asInstanceOf[Long])
-    val counts = Seq(
-      "vectors" -> nv, "graph" -> ng,
+    Seq("vectors" -> nv, "graph" -> ng,
       "reps" -> nr, "cents" -> ix.cents.length.toLong)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_MANIFEST"),
-      counts.map { case (c, n) => s"$c $n" }
-        .mkString("\n").getBytes("UTF-8"))
-    ()
+      .map { case (c, n) => s"$c $n" }
   }
 
   /** Load a persisted index back into the partitioned serving form.
@@ -3230,10 +3227,8 @@ object Knn {
     * trained index's. */
   private[graft] def loadIndex(spark: SparkSession, dir: String): V21Static = {
     import spark.implicits._
-    val mf = java.nio.file.Paths.get(dir, "_MANIFEST")
-    require(java.nio.file.Files.exists(mf), s"no _MANIFEST in $dir — uncommitted store")
-    val lines = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
-      .split("\n")
+    val lines = graft.store.Versioned(dir).manifest("").getOrElse(throw new
+      IllegalArgumentException(s"no manifest in $dir — uncommitted store"))
     // a delta segment is not a servable index — refuse with the
     // committed-read contract's own exception, not a parse crash
     // (the LSM assembler, loadAnnStoreLsm, is the reader for mixed
@@ -3283,32 +3278,19 @@ object Knn {
     new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The VERSIONED index store — the fleet contract over
-    * [[saveIndex]]/[[loadIndex]]: versions are directories `v1, v2,
-    * …` under one root, each committed by its own _MANIFEST (written
-    * LAST — the ForecastStore ordering), so a reader always has a
-    * consistent answer to "what do I serve" while a writer is
-    * mid-publish. The next version number skips over TORN attempts
-    * (a dir without a manifest is never reused — parquet writes
-    * refuse existing paths), and [[latestCommittedVersion]] simply
-    * never returns them. SINGLE-PUBLISHER contract: one root has
-    * one writer (the trainer, then the compaction door that owns
-    * the index) — two concurrent publishers could race the version
-    * scan to the same number and the loser's parquet write fails
-    * loudly (path exists), never tearing a committed dir; a
+    * [[saveIndex]]/[[loadIndex]] on a [[graft.store.Versioned]] root
+    * (commit protocol, torn-attempt numbering and the single-publisher
+    * rule are stated there), so a reader always has a consistent
+    * answer to "what do I serve" while a writer is mid-publish; a
     * multi-writer fleet needs an external lease, which is the
     * coordinator's job, not the store format's. */
   private[graft] def latestCommittedVersion(root: String): Option[Int] =
-    StoreVersions.latestCommitted(root)
+    graft.store.Versioned(root).latestCommitted
 
-  /** Publish an index as the next store version: the component
-    * parquet writes land first, the manifest last — a crash at any
-    * point leaves a torn, never-served directory, not a half-index
-    * a reader could load. Returns the published version number. */
-  private[graft] def saveIndexVersion(ix: V21Static, root: String): Int = {
-    val next = StoreVersions.next(root)
-    saveIndex(ix, new java.io.File(root, s"v$next").getAbsolutePath)
-    next
-  }
+  /** Publish an index as the next store version. Returns the
+    * published version number. */
+  private[graft] def saveIndexVersion(ix: V21Static, root: String): Int =
+    graft.store.Versioned(root).publish(writeIndex(ix, _))
 
   /** Load the newest COMMITTED store version through the
     * manifest gate; refuses loudly when no committed version exists
@@ -3318,7 +3300,7 @@ object Knn {
     val v = latestCommittedVersion(root).getOrElse(throw new
       IllegalStateException(
         s"no committed index version under $root — refusing to serve"))
-    (loadIndex(spark, new java.io.File(root, s"v$v").getAbsolutePath), v)
+    (loadIndex(spark, graft.store.Versioned(root).path(s"v$v")), v)
   }
 
   /** RETENTION leg of the versioned store — the seam the lifecycle
@@ -3329,7 +3311,7 @@ object Knn {
     * [[graft.sources.ForecastStore.vacuum]] / p16 snapshot-expiry /
     * p17 orphan-reclaim discipline: delete committed versions
     * SUPERSEDED beyond the newest `keep`, and TORN attempts (no
-    * _MANIFEST) numbered BELOW the newest committed version (dead
+    * manifest) numbered BELOW the newest committed version (dead
     * crashes the version counter has already skipped past) — never
     * the newest committed version itself (a reader of "what do I
     * serve" must always have an answer), and never a torn directory
@@ -3355,56 +3337,27 @@ object Knn {
     * reader-lease protocol is the coordinator's job, like the
     * single-publisher lease one level up.
     *
-    * DELETE ORDER: a committed victim's `_MANIFEST` is removed FIRST
-    * — one atomic demote-to-torn — so a crash mid-reclaim can only
-    * leave a torn-below directory (reclaimed by the next vacuum),
-    * never a dir that still LOOKS committed with parquet missing
-    * underneath (which would silently serve a short component count
-    * into the load gate's refusal path, or worse, demote a
-    * kept-adjacent rollback target out of band). A version counts as
-    * reclaimed — and is reported — once its demote landed, even if
-    * some data files survived the best-effort sweep.
-    *
-    * OBJECT-STORE POSTURE (the m27 documentation precedent): the
-    * driver-side `File` recursion is the local stand-in for the
-    * metadata-scale work this is; an object-store port replaces it
-    * with list+delete batches keyed the same way (demote = delete
-    * the manifest object first) and must tolerate list-after-delete
-    * eventual consistency on the manifest check — the demote-first
-    * ordering is exactly what makes that safe. */
+    * Reclaim is [[graft.store.Versioned.reclaim]]'s demote-first
+    * delete, so a crash mid-vacuum can only leave a torn-below
+    * directory for the next vacuum. */
   private[graft] def vacuumIndexStore(root: String, keep: Int)
       : Seq[String] = {
     require(keep >= 1, "must keep at least one committed version")
-    val d = new java.io.File(root)
-    def manifested(f: java.io.File): Boolean =
-      new java.io.File(f, "_MANIFEST").exists()
-    val dirs = Option(d.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .sortBy(_.getName.drop(1).toInt)
-    val committed = dirs.filter(manifested)
-    if (committed.isEmpty) Seq.empty
-    else {
-      val keepNames = committed.takeRight(keep).map(_.getName).toSet
-      val newestC = committed.last.getName.drop(1).toInt
-      def rmTree(f: java.io.File): Boolean = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-        f.delete()
-      }
-      // manifest-first: demote the victim atomically, THEN sweep its
-      // data; report every dir whose demote landed (it can never
-      // serve again — the ForecastStore.vacuum accounting contract,
-      // now crash-ordered)
-      dirs.filter { f =>
-        !keepNames.contains(f.getName) &&
-          (manifested(f) || f.getName.drop(1).toInt < newestC)
-      }.filter { f =>
-        val mf = new java.io.File(f, "_MANIFEST")
-        val demoted = !mf.exists() || mf.delete()
-        if (demoted) rmTree(f)
-        demoted
-      }.map(_.getName)
-    }
+    val committed = graft.store.Versioned(root).committed
+    reclaimExcept(root, committed.takeRight(keep).toSet)
+  }
+
+  /** Reclaim every version of `root` outside `keep` that is committed
+    * or torn BELOW the newest committed version; a torn directory
+    * above it is the publish in flight, and a store with no committed
+    * version is left untouched. Returns the reclaimed names. */
+  private def reclaimExcept(root: String, keep: Set[Int]): Seq[String] = {
+    val store = graft.store.Versioned(root)
+    val committed = store.committed.toSet
+    val newest = if (committed.isEmpty) 0 else committed.max
+    store.reclaim(store.versions
+      .filter(v => !keep(v) && (committed(v) || v < newest))
+      .map(v => s"v$v"))
   }
 
   /** v29: INDEX PERSISTENCE — the lifecycle leg that SEPARATES the
@@ -3414,7 +3367,7 @@ object Knn {
     * storage, loaded by N serving processes that never see the
     * training pipeline. This operator proves that split end-to-end:
     * build v21's exact index, [[saveIndex]] it (per-component
-    * parquet + a row-count _MANIFEST commit marker), [[loadIndex]]
+    * parquet + a row-count manifest commit marker), [[loadIndex]]
     * it back through the committed-read gate, and serve the
     * standing query set FROM THE LOADED index — the rows are batch
     * v21's bitwise (doubles round-trip parquet exactly; the
@@ -3431,11 +3384,9 @@ object Knn {
     */
   def v29(spark: SparkSession, dir: String): DataFrame = {
     val ix = v21Static(spark, dir)
-    val store = java.nio.file.Files.createTempDirectory("graft_v29_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(store)
-    saveIndex(ix, store.getAbsolutePath)
-    val ix2 = loadIndex(spark, store.getAbsolutePath)
+    val store = graft.store.Versioned.tempRoot("graft_v29_")
+    saveIndex(ix, store)
+    val ix2 = loadIndex(spark, store)
     v21ServeBatch(ix2, codebook(vectors(spark, dir), "vec_id < 10"))
       .transform(graft.Tables.ordered(_, col("qid"), col("rnk")))
   }
@@ -3544,7 +3495,7 @@ object Knn {
     * because [[saveIndexVersion]] only ever appends. The query runs
     * the store's whole supersession story: the batch trainer
     * publishes the full index as v1; a publisher CRASH leaves a torn
-    * v2 (component bytes, no _MANIFEST — never served, but still
+    * v2 (component bytes, no manifest — never served, but still
     * occupying storage); the compaction rebuild (v28's live-only
     * construction) publishes as v3 — the version counter skipping
     * the torn attempt, per the store contract; then
@@ -3564,10 +3515,7 @@ object Knn {
     * instead of O(compactions).
     */
   def v30(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_v30_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(root)
-    val rootP = root.getAbsolutePath
+    val rootP = graft.store.Versioned.tempRoot("graft_v30_")
     // v1: the batch trainer's first publish — the FULL index
     val ix0 = v21Static(spark, dir)
     saveIndexVersion(ix0, rootP)
@@ -3575,10 +3523,7 @@ object Knn {
     // v2: a TORN publish — a crash after component bytes landed but
     // before the manifest; the store must neither serve it nor ever
     // reuse its number
-    val torn = new java.io.File(root, "v2")
-    torn.mkdirs()
-    java.nio.file.Files.write(torn.toPath.resolve("part-00000-crash"),
-      Array[Byte](0x50, 0x41, 0x52, 0x31))
+    graft.store.Versioned(rootP).replace("v2/part-00000-crash", "PAR1")
     // v3: the compacted (live-only) rebuild — the supersession that
     // makes retention necessary
     val e = vectors(spark, dir)
@@ -3602,58 +3547,48 @@ object Knn {
 
   // ---------- v31: DELTA-SEGMENT publish (LSM index store) ----------
 
-    /** Publish a DELTA SEGMENT as the next store version —
+  /** Publish a DELTA SEGMENT as the next store version —
     * COMPONENT-SPARSE: `parts` names whichever of
     * vectors/edges/tombs this segment carries (an insert wave
     * ships vectors+edges, an erasure wave ships tombs; absent
     * components are recorded 0 in the manifest and never written,
     * so a tombstone-only segment costs ONE write job). O(|delta|)
-    * bytes, never a full index copy. Same commit discipline as
-    * [[saveIndexVersion]]: component parquet first, the manifest
-    * LAST, with a leading `kind delta` line so readers and the
-    * vacuum can tell segments from bases ([[saveIndexVersion]]'s
-    * manifests parse unchanged — a store written by v29/v30/s43
-    * stays valid). */
+    * bytes, never a full index copy. Committed like
+    * [[saveIndexVersion]], its manifest with a leading `kind delta`
+    * line so readers and the vacuum can tell segments from bases
+    * ([[saveIndexVersion]]'s manifests parse unchanged — a store
+    * written by v29/v30/s43 stays valid). */
   private[graft] def saveDeltaVersion(root: String,
       parts: Map[String, DataFrame]): Int = {
     require(parts.nonEmpty &&
       parts.keySet.subsetOf(Set("vectors", "edges", "tombs")))
-    val next = StoreVersions.next(root)
-    val dir = new java.io.File(root, s"v$next").getAbsolutePath
-    // independent component writes land concurrently (guide §2.6 —
-    // the saveIndex discipline); the manifest still commits LAST.
-    // Manifest counts ride the writes as observed metrics (round
-    // 19 — the saveIndex discipline: zero extra count jobs, the
-    // LSM assembler's gate still independently recounts what
-    // landed); components the caller did not ship (a tombstone-only
-    // or insert-only segment) are recorded 0 and never written
-    val landed = graft.functions.Par.run(parts.toSeq.sortBy(_._1).map {
-      case (c, df) => () => {
-        val obs = new org.apache.spark.sql.Observation()
-        df.observe(obs, count(lit(1)).as("n")).write.parquet(s"$dir/$c")
-        c -> obs.get("n").asInstanceOf[Long]
-      }
-    }).toMap
-    val counts = Seq("vectors", "edges", "tombs").map(c =>
-      c -> landed.getOrElse(c, 0L))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_MANIFEST"),
-      ("kind delta" +: counts.map { case (c, n) => s"$c $n" })
-        .mkString("\n").getBytes("UTF-8"))
-    next
+    graft.store.Versioned(root).publish { dir =>
+      // independent component writes land concurrently (guide §2.6 —
+      // the saveIndex discipline); manifest counts ride the writes as
+      // observed metrics (round 19 — zero extra count jobs, the LSM
+      // assembler's gate still independently recounts what landed);
+      // components the caller did not ship (a tombstone-only or
+      // insert-only segment) are recorded 0 and never written
+      val landed = graft.functions.Par.run(parts.toSeq.sortBy(_._1).map {
+        case (c, df) => () => {
+          val obs = new org.apache.spark.sql.Observation()
+          df.observe(obs, count(lit(1)).as("n")).write.parquet(s"$dir/$c")
+          c -> obs.get("n").asInstanceOf[Long]
+        }
+      }).toMap
+      "kind delta" +: Seq("vectors", "edges", "tombs").map(c =>
+        s"$c ${landed.getOrElse(c, 0L)}")
+    }
   }
 
   /** Is committed version `v` a delta segment? (Manifest-first
     * line; a base's manifest starts with its component counts.) */
-  private[graft] def isDeltaVersion(root: String, v: Int): Boolean = {
-    val mf = java.nio.file.Paths.get(root, s"v$v", "_MANIFEST")
-    java.nio.file.Files.exists(mf) &&
-      new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
-        .split("\n").headOption.contains("kind delta")
-  }
+  private[graft] def isDeltaVersion(root: String, v: Int): Boolean =
+    graft.store.Versioned(root).manifest(s"v$v")
+      .exists(_.headOption.contains("kind delta"))
 
   private[graft] def committedVersions(root: String): Seq[Int] =
-    StoreVersions.committed(root)
+    graft.store.Versioned(root).committed
 
   /** Unfolded delta segments: committed deltas ABOVE the newest
     * committed base — exactly what [[loadAnnStoreLsm]]'s assembly
@@ -3694,7 +3629,8 @@ object Knn {
     if (bases.isEmpty) throw new IllegalStateException(
       s"no committed base version under $root — refusing to serve")
     val b = bases.max
-    val ix0 = loadIndex(spark, new java.io.File(root, s"v$b").getAbsolutePath)
+    val store = graft.store.Versioned(root)
+    val ix0 = loadIndex(spark, store.path(s"v$b"))
     val deltas = committed.filter(v => v > b && isDeltaVersion(root, v))
     // manifests are driver-side file reads; the per-component count
     // gates are independent footer-metadata jobs — run ALL of them
@@ -3703,12 +3639,9 @@ object Knn {
     // assemble the union chain from the already-validated frames.
     // Same gates, same refusal message, same assembled plan.
     val mfs = deltas.map { v =>
-      val dir = new java.io.File(root, s"v$v").getAbsolutePath
-      val mf = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(dir, "_MANIFEST")), "UTF-8")
-        .split("\n").drop(1).map(_.split(" "))
+      val mf = store.manifest(s"v$v").get.drop(1).map(_.split(" "))
         .map(a => a(0) -> a(1).toLong).toMap
-      (v, dir, mf)
+      (v, store.path(s"v$v"), mf)
     }
     // a component the manifest records as 0 was never written
     // (component-sparse segments) — fold nothing for it; a
@@ -3753,14 +3686,7 @@ object Knn {
     * kept base (still unfolded relative to it); reclaim superseded
     * bases, FOLDED deltas (segments at or below the newest base —
     * compaction consumed them), and dead torn attempts below the
-    * newest committed version. Same demote-first delete order and
-    * accounting as [[vacuumIndexStore]] — and the same object-store
-    * posture: a port replaces the `File` recursion with list+delete
-    * batches, demotes by deleting the manifest object FIRST, and
-    * must tolerate list-after-delete eventual consistency on the
-    * manifest check (see [[vacuumIndexStore]]'s doc — the two
-    * vacuum paths share one posture by contract, so they cannot
-    * drift). */
+    * newest committed version. Same reclaim as [[vacuumIndexStore]]. */
   private[graft] def vacuumAnnStoreLsm(root: String, keepBases: Int)
       : Seq[String] = {
     require(keepBases >= 1, "must keep at least one base")
@@ -3769,28 +3695,8 @@ object Knn {
     if (bases.isEmpty) Seq.empty
     else {
       val keptBases = bases.takeRight(keepBases)
-      val oldestKept = keptBases.head
-      val newestC = committed.max
-      val d = new java.io.File(root)
-      def rmTree(f: java.io.File): Boolean = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-        f.delete()
-      }
-      val keep = (keptBases ++ committed.filter(_ > oldestKept)).toSet
-      Option(d.listFiles()).toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-        .sortBy(_.getName.drop(1).toInt)
-        .filter { f =>
-          val n = f.getName.drop(1).toInt
-          !keep.contains(n) &&
-            (committed.contains(n) || n < newestC)
-        }.filter { f =>
-          val mf = new java.io.File(f, "_MANIFEST")
-          val demoted = !mf.exists() || mf.delete()
-          if (demoted) rmTree(f)
-          demoted
-        }.map(_.getName)
+      reclaimExcept(root,
+        (keptBases ++ committed.filter(_ > keptBases.head)).toSet)
     }
   }
 
@@ -3824,10 +3730,7 @@ object Knn {
     * was always the one amortized full-corpus pass), and retention
     * stays O(keep) bases + unfolded deltas. */
   def v31(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_v31_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(root)
-    val rootP = root.getAbsolutePath
+    val rootP = graft.store.Versioned.tempRoot("graft_v31_")
     val e = vectors(spark, dir)
     val insPred = s"vec_id >= 10 AND vec_id % $v26ModK = 0"
     val basePred = s"vec_id >= 10 AND vec_id % $v26ModK <> 0"
@@ -3980,18 +3883,6 @@ object Knn {
     (r.getLong(0), r.getLong(1))
   }
 
-  private def copyTree(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      Option(src.listFiles()).getOrElse(Array.empty)
-        .foreach(f => copyTree(f, new java.io.File(dst, f.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    }
-  }
-
   /** QUORUM HEAL across three index-store replicas — dq11's
     * majority vote applied at COMPONENT grain to the fleet's shared
     * artifact (the one store the s43 doors bootstrap from had no
@@ -4003,7 +3894,7 @@ object Knn {
     * minority root, which publishes its HEALED next version —
     * file-copy of its own intact components plus the
     * lowest-agreeing majority root's copy of each convicted one
-    * (dq11's source rule), manifest written LAST — so the heal is
+    * (dq11's source rule) — so the heal is
     * copy-on-write and the poisoned version stays for forensics. A
     * component with NO majority (three-way tie) REFUSES before ANY
     * publish: with no designated truth there is nothing to heal
@@ -4018,9 +3909,8 @@ object Knn {
     val vers = roots.map(r => latestCommittedVersion(r).getOrElse(
       throw new IllegalStateException(
         s"no committed index version under $r — refusing to vote")))
-    val dirs = roots.zip(vers).map { case (r, v) =>
-      new java.io.File(r, s"v$v").getAbsolutePath
-    }
+    val stores = roots.map(graft.store.Versioned(_))
+    val dirs = stores.zip(vers).map { case (st, v) => st.path(s"v$v") }
     // 12 independent digest scans (4 components × 3 replicas) —
     // overlapped (guide §2.6); results stay positional per (replica,
     // component), so the vote below is order-deterministic
@@ -4047,26 +3937,19 @@ object Knn {
     }
     val convicted = heals.map(_._1).distinct.sorted
     convicted.foreach { i =>
-      val next = StoreVersions.next(roots(i))
-      val dst = new java.io.File(roots(i), s"v$next")
       val srcByComp = heals.filter(_._1 == i)
         .map(h => h._2 -> h._3).toMap
-      annStoreComps.foreach { c =>
-        val from = srcByComp.get(c).map(dirs).getOrElse(dirs(i))
-        copyTree(new java.io.File(from, c), new java.io.File(dst, c))
+      stores(i).publish { dst =>
+        // counts per component from wherever it came; intact
+        // components digest-equal the majority's, so the healed
+        // manifest equals the majority's verbatim (spec-pinned)
+        annStoreComps.map { c =>
+          val src = srcByComp.getOrElse(c, i)
+          stores(i).copy(s"${dirs(src)}/$c", s"$dst/$c")
+          stores(src).manifest(s"v${vers(src)}").get
+            .find(_.startsWith(s"$c ")).get
+        }
       }
-      // manifest LAST — counts per component from wherever it came;
-      // intact components digest-equal the majority's, so the healed
-      // manifest equals the majority's verbatim (spec-pinned)
-      val counts = annStoreComps.map { c =>
-        val from = srcByComp.get(c).map(dirs).getOrElse(dirs(i))
-        val line = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(from, "_MANIFEST")), "UTF-8")
-          .split("\n").find(_.startsWith(s"$c ")).get
-        line
-      }
-      java.nio.file.Files.write(dst.toPath.resolve("_MANIFEST"),
-        counts.mkString("\n").getBytes("UTF-8"))
     }
     convicted.map(roots)
   }
@@ -4081,8 +3964,8 @@ object Knn {
     * dropped and the manifest count rewritten to match — the count
     * gate passes, only a cross-replica vote can see it); the quorum
     * convicts the minority by component digest, heals it from the
-    * lowest-agreeing majority root (copy-on-write next version,
-    * manifest last), and a second pass finds unanimity and
+    * lowest-agreeing majority root (a copy-on-write next
+    * version), and a second pass finds unanimity and
     * publishes nothing. The emitted rows are the HEALED minority
     * root's serve — bitwise the trained index's, so the oracle is
     * v21's serve chain VERBATIM (the poison, the vote and the heal
@@ -4096,37 +3979,28 @@ object Knn {
     * intact 100 TB vectors component is never rewritten for a
     * poisoned 1 GB graph). */
   def v32(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft_v32_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(base)
-    val roots = Seq("r1", "r2", "r3").map(nm =>
-      new java.io.File(base, nm).getAbsolutePath)
+    val base = graft.store.Versioned.tempRoot("graft_v32_")
+    val roots = Seq("r1", "r2", "r3").map(nm => s"$base/$nm")
     val ix0 = v21Static(spark, dir)
     // three independent replica publishes — overlap them (guide
     // §2.6); each write lands under its own root
     graft.functions.Par.run(roots.map(r => () => saveIndexVersion(ix0, r)))
     ix0.reps.unpersist()
-    // PLANT: drop r2's graph's last edge, self-consistently
-    val gdir = s"${roots(1)}/v1/graph"
-    val g = spark.read.parquet(gdir)
+    // PLANT: drop r2's graph's last edge, self-consistently — the
+    // graph rewritten and v1 recommitted with the matching count
+    val r2 = graft.store.Versioned(roots(1))
+    val g = spark.read.parquet(r2.path("v1/graph"))
     val victim = g.orderBy(col("src_id").desc, col("nbr_id").desc)
       .limit(1)
     val poisoned = g.exceptAll(victim).localCheckpoint()
     val nP = poisoned.count()
-    val gd = new java.io.File(gdir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(gd)
-    poisoned.write.parquet(gdir)
-    val mfp = java.nio.file.Paths.get(roots(1), "v1", "_MANIFEST")
-    val mf = new String(java.nio.file.Files.readAllBytes(mfp), "UTF-8")
-      .split("\n").map { l =>
+    r2.commit("v1") { dir =>
+      r2.delete("v1/graph")
+      poisoned.write.parquet(s"$dir/graph")
+      r2.manifest("v1").get.map { l =>
         if (l.startsWith("graph ")) s"graph $nP" else l
       }
-    java.nio.file.Files.write(mfp, mf.mkString("\n").getBytes("UTF-8"))
+    }
     graft.functions.Lineage.freeCheckpoint(poisoned)
     // VOTE + HEAL, then the idempotence pass
     val healed = quorumHealAnnStore(spark, roots)

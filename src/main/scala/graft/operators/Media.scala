@@ -2892,10 +2892,7 @@ object Media {
       : String =
     shardByteStores.computeIfAbsent(dir, { _ =>
       import ss.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft_m28_")
-        .toFile
-      graft.operators.Incremental.cleanupOnExit(d)
-      val root = d.getAbsolutePath
+      val root = graft.store.Versioned.tempRoot("graft_m28_")
       val docs = Tables.documents(ss, dir)
         .filter($"doc_id" % 3 === 0)
         .selectExpr("doc_id", "rpad(substring(text, 1, 61), 61, ' ') AS s")

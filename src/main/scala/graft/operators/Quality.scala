@@ -1043,25 +1043,20 @@ object Quality {
   private[graft] def withPg(t: DataFrame): DataFrame =
     t.withColumn("pg", expr(s"(o_orderkey % $dq8Buckets) % $dq10Parts"))
 
-  /** Newest COMMITTED version of a partitioned replica store —
-    * directories `v1, v2, …` under `root`, committed by a
-    * `_MANIFEST` written LAST (the index-store/ForecastStore
-    * ordering), so a torn publish is never visible to readers. */
+  /** Newest COMMITTED version of a partitioned replica store — a
+    * numbered [[graft.store.Versioned]] root, so a torn publish is
+    * never visible to readers. */
   private[graft] def latestStoreVersion(root: String): Option[Int] =
-    StoreVersions.latestCommitted(root)
+    graft.store.Versioned(root).latestCommitted
 
   /** The manifest is the RESOLUTION MAP: one `pg version` line per
     * partition group naming the version directory that serves it —
     * Iceberg/Delta's copy-on-write file resolution at partition
     * grain. Readers are manifest-scoped, never listing-scoped. */
   private[graft] def writeStoreManifest(root: String, v: Int,
-      map: Map[Long, Int]): Unit = {
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, s"v$v", "_MANIFEST"),
-      map.toSeq.sortBy(_._1).map { case (pg, ver) => s"$pg $ver" }
-        .mkString("\n").getBytes("UTF-8"))
-    ()
-  }
+      map: Map[Long, Int]): Unit =
+    graft.store.Versioned(root).commit(s"v$v")(_ =>
+      map.toSeq.sortBy(_._1).map { case (pg, ver) => s"$pg $ver" })
 
   /** Resolution map of the newest committed version; refuses loudly
     * on an empty or all-torn store (the committed-read gate). */
@@ -1070,11 +1065,12 @@ object Quality {
     val v = latestStoreVersion(root).getOrElse(throw new
       IllegalStateException(
         s"no committed replica version under $root — refusing to serve"))
-    val lines = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(root, s"v$v", "_MANIFEST")), "UTF-8")
-    (v, lines.split("\n").map(_.split(" "))
-      .map(a => a(0).toLong -> a(1).toInt).toMap)
+    (v, resolutionMap(root, v).get)
   }
+
+  private def resolutionMap(root: String, v: Int): Option[Map[Long, Int]] =
+    graft.store.Versioned(root).manifest(s"v$v").map(_.map(_.split(" "))
+      .map(a => a(0).toLong -> a(1).toInt).toMap)
 
   /** Each version directory records its OWN schema as a `_SCHEMA`
     * DDL file, written with the data and before the manifest: the
@@ -1087,22 +1083,15 @@ object Quality {
     * with per-version evolution the schema is version state, not
     * store state. */
   private[graft] def writeStoreSchema(root: String, v: Int,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, s"v$v", "_SCHEMA"),
-      schema.toDDL.getBytes("UTF-8"))
-    ()
-  }
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    graft.store.Versioned(root).replace(s"v$v/_SCHEMA", schema.toDDL)
 
   private[graft] def readStoreSchema(spark: SparkSession, root: String,
-      v: Int): org.apache.spark.sql.types.StructType = {
-    val p = java.nio.file.Paths.get(root, s"v$v", "_SCHEMA")
-    if (java.nio.file.Files.exists(p))
-      org.apache.spark.sql.types.StructType.fromDDL(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    else // pre-_SCHEMA version directory: infer (non-empty by then)
-      spark.read.parquet(s"$root/v$v/data").schema
-  }
+      v: Int): org.apache.spark.sql.types.StructType =
+    graft.store.Versioned(root).read(s"v$v/_SCHEMA")
+      .map(org.apache.spark.sql.types.StructType.fromDDL)
+      // pre-_SCHEMA version directory: infer (non-empty by then)
+      .getOrElse(spark.read.parquet(s"$root/v$v/data").schema)
 
   /** Read the store through the newest committed manifest. */
   private[graft] def readReplicaStore(spark: SparkSession,
@@ -1125,13 +1114,9 @@ object Quality {
     * because the union is over the versions THAT manifest names. */
   private[graft] def readReplicaStoreAt(spark: SparkSession,
       root: String, at: Int): DataFrame = {
-    val mfp = java.nio.file.Paths.get(root, s"v$at", "_MANIFEST")
-    if (!java.nio.file.Files.exists(mfp))
-      throw new IllegalStateException(
-        s"no committed version v$at under $root — refusing to serve")
-    val map = new String(java.nio.file.Files.readAllBytes(mfp), "UTF-8")
-      .split("\n").map(_.split(" "))
-      .map(a => a(0).toLong -> a(1).toInt).toMap
+    val map = resolutionMap(root, at).getOrElse(throw new
+      IllegalStateException(
+        s"no committed version v$at under $root — refusing to serve"))
     val byV = map.groupBy(_._2).toSeq.sortBy(_._1)
     val schemas = byV.map { case (v, _) =>
       v -> readStoreSchema(spark, root, v)
@@ -1158,7 +1143,7 @@ object Quality {
   }
 
   /** Seed `root` with v1 = `rows` (order-shaped), partitioned by
-    * `pg`, manifest-last. */
+    * `pg`. */
   private[graft] def seedStoreFrom(rows: DataFrame, root: String): Unit = {
     val shaped = withPg(rows)
     shaped
@@ -1181,8 +1166,8 @@ object Quality {
     * partitions' pruned read), the corrections landed beside the
     * data as the `repairlog` audit log (what Cassandra's read-repair
     * and a Delta MERGE history record), untouched partitions
-    * re-pointed at their existing files, and the manifest written
-    * LAST — a crash anywhere leaves the previous version serving.
+    * re-pointed at their existing files — a crash anywhere leaves the
+    * previous version serving.
     * A pass over a healthy store derives ZERO corrections and
     * publishes NOTHING (idempotence is structural: no divergence →
     * no damaged partitions → no write). Returns the correction
@@ -1205,7 +1190,7 @@ object Quality {
     * the store at `root` (read from `r`, its current resolved view)
     * and commit the next version — damaged partitions rewritten,
     * corrections landed as the `repairlog` audit, untouched partitions
-    * re-pointed, manifest LAST. Caller guarantees `corr` is
+    * re-pointed. Caller guarantees `corr` is
     * non-empty and checkpointed. Returns (published version,
     * damaged partition-group set) — the set bounds the caller's
     * from-disk re-audit (s46's mark refresh reads back exactly
@@ -1236,7 +1221,7 @@ object Quality {
       .unionByName(withPg(p.join(insK, Seq("o_orderkey"), "left_semi")),
         allowMissingColumns = true)
       .repartition(damaged.size, col("pg"))
-    val next = StoreVersions.next(root)
+    val next = graft.store.Versioned(root).next
     healed.write.partitionBy("pg").parquet(s"$root/v$next/data")
     writeStoreSchema(root, next, healed.schema)
     // the audit log keeps every correction column except the raw
@@ -1253,7 +1238,7 @@ object Quality {
     * PERSISTED, versioned, partition-grain copy-on-write parquet
     * store, and the repair job actually applies the corrections to
     * it. The query runs the whole story end-to-end: seed v1 (the
-    * diverged replica, manifest-last), repair pass 1 (digest
+    * diverged replica), repair pass 1 (digest
     * compare FROM THE STORE → dq9's corrections → publish v2 with
     * only the DAMAGED partition groups rewritten + the `repairlog`
     * audit log + the re-pointed manifest), repair pass 2 (reads the
@@ -1270,7 +1255,7 @@ object Quality {
     * the whole point — O(damaged partitions) bytes, with untouched
     * partitions re-pointed, not copied (the manifest is the commit,
     * Iceberg/Delta's COW discipline at partition grain); a torn
-    * publish is invisible (manifest-last) and a second run is a
+    * publish is invisible and a second run is a
     * no-op. A 0.1%-diverged 100 TB replica heals by rewriting ~0.1%
     * of its partitions. */
   def dq10(spark: SparkSession, dir: String): DataFrame = {
@@ -1278,10 +1263,7 @@ object Quality {
     val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
       "o_orderpriority")
     val p = Tables.orders(spark, dir).selectExpr(cols: _*)
-    val rootF = java.nio.file.Files
-      .createTempDirectory("graft_dq10_").toFile
-    graft.operators.Incremental.cleanupOnExit(rootF)
-    val root = rootF.getAbsolutePath
+    val root = graft.store.Versioned.tempRoot("graft_dq10_")
     seedReplicaStore(p, root)
     repairPass(spark, root, p)
     val rerun = repairPass(spark, root, p)
@@ -1709,8 +1691,9 @@ object Quality {
       roots: Seq[String]): DataFrame =
     roots.flatMap { root =>
       val (v, _) = readStoreManifest(root)
-      val lg = new java.io.File(s"$root/v$v/repairlog")
-      if (lg.isDirectory) Some(spark.read.parquet(lg.getAbsolutePath))
+      val store = graft.store.Versioned(root)
+      if (store.isDir(s"v$v/repairlog"))
+        Some(spark.read.parquet(store.path(s"v$v/repairlog")))
       else None
     }.reduceOption(_ unionByName _).getOrElse(
       spark.range(0).selectExpr("'' AS replica", "id AS bucket",
@@ -1724,7 +1707,7 @@ object Quality {
     * minority store FROM THE MAJORITY STORES (the primary only
     * where all three disagree — the tie), publishes each healed
     * store's next version (partition-grain copy-on-write,
-    * manifest-last, repairlog audit), and persists the VOTE RECORD;
+    * repairlog audit), and persists the VOTE RECORD;
     * quorum pass 2 reads the healed stores, finds unanimity, and
     * publishes nothing (idempotence is structural). The emitted
     * rows are the stores' own repairlog audits with TWO
@@ -1743,17 +1726,14 @@ object Quality {
     val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
       "o_orderpriority")
     val p = Tables.orders(spark, dir).selectExpr(cols: _*)
-    val base = java.nio.file.Files.createTempDirectory("graft_dq12_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(base)
-    val roots = Seq("r1", "r2", "r3").map(nm =>
-      new java.io.File(base, nm).getAbsolutePath)
+    val base = graft.store.Versioned.tempRoot("graft_dq12_")
+    val roots = Seq("r1", "r2", "r3").map(nm => s"$base/$nm")
     // three independent replica seeds, each under its own root —
     // overlap them (guide §2.6 job overlap)
     graft.functions.Par.run(dq11Replicas(p).zip(roots).map {
       case ((_, r), root) => () => seedStoreFrom(r, root)
     })
-    val audit = new java.io.File(base, "audit").getAbsolutePath
+    val audit = s"$base/audit"
     // the primary's digest is pass-invariant — hash it once for
     // both passes (round 19; the 4096-row digest table checkpoints
     // at metadata size, the corpus hash scan halves)
@@ -1879,10 +1859,7 @@ object Quality {
     val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
       "o_orderpriority")
     val p = Tables.orders(spark, dir).selectExpr(cols: _*)
-    val rootF = java.nio.file.Files
-      .createTempDirectory("graft_dq13_").toFile
-    graft.operators.Incremental.cleanupOnExit(rootF)
-    val root = rootF.getAbsolutePath
+    val root = graft.store.Versioned.tempRoot("graft_dq13_")
     // v1: the diverged replica in the OLD 4-column shape
     seedReplicaStore(p, root)
     // the EVOLVED primary: floor() is exact on IEEE doubles, so the

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.Dataset
 
 /** Operational machinery mirrored from the reference container:
@@ -39,28 +38,25 @@ object Retry {
 /** File-backed status document with the reference's semantics: an
   * `isUpdating` mutex (main.py:33-35, 79, 448), dotted-field set /
   * unset (`globalCharts.<date>`), and atomic persistence
-  * (write-temp + move). One flat map of dotted keys -> values.
+  * ([[graft.store.Versioned.replace]]). One flat map of dotted keys
+  * -> values.
   */
 class StatusStore(path: Path) {
   def this(dir: String) = this(Paths.get(dir, "status.json"))
+
+  private val store = graft.store.Versioned(path.getParent.toString)
+  private val name = path.getFileName.toString
 
   private def parse(s: String): Map[String, String] =
     s.linesIterator.filter(_.contains("=")).map { l =>
       val i = l.indexOf('='); l.take(i) -> l.drop(i + 1)
     }.toMap
 
-  def fetch(): Map[String, String] =
-    if (Files.exists(path)) parse(new String(Files.readAllBytes(path), StandardCharsets.UTF_8))
-    else Map.empty
+  def fetch(): Map[String, String] = store.read(name).map(parse).getOrElse(Map.empty)
 
-  private def write(m: Map[String, String]): Unit = {
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.createDirectories(path.getParent)
-    Files.write(tmp, m.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-      .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def write(m: Map[String, String]): Unit =
+    store.replace(name, m.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
+      .mkString("\n"))
 
   def set(field: String, value: String): Unit = write(fetch() + (field -> value))
   def unset(field: String): Unit = write(fetch() - field)

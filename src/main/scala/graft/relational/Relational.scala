@@ -1448,10 +1448,7 @@ object Relational {
   private[graft] def variantStore(spark: SparkSession, dir: String)
       : String =
     variantStores.computeIfAbsent(dir, { _ =>
-      val store = java.nio.file.Files.createTempDirectory("graft_q42_")
-        .toFile
-      graft.operators.Incremental.cleanupOnExit(store)
-      val path = new java.io.File(store, "events_variant").getAbsolutePath
+      val path = graft.store.Versioned.tempRoot("graft_q42_") + "/events_variant"
       // INGEST: parse once, store the variant column
       Tables.events(spark, dir).selectExpr("event_id", variantParseExpr)
         .write.parquet(path)
@@ -1538,12 +1535,9 @@ object Relational {
   private[graft] def variantStatsStore(spark: SparkSession, dir: String)
       : (String, String) =
     variantStatsStores.computeIfAbsent(dir, { _ =>
-      val store = java.nio.file.Files.createTempDirectory("graft_q44_")
-        .toFile
-      graft.operators.Incremental.cleanupOnExit(store)
-      val data = new java.io.File(store, "events_variant_by_pri")
-        .getAbsolutePath
-      val manifest = new java.io.File(store, "file_stats").getAbsolutePath
+      val store = graft.store.Versioned.tempRoot("graft_q44_")
+      val data = s"$store/events_variant_by_pri"
+      val manifest = s"$store/file_stats"
       Tables.events(spark, dir).selectExpr("event_id", variantParseExpr)
         .withColumn("pri", expr("variant_get(v, '$.meta.pri', 'bigint')"))
         .repartitionByRange(q44Files, col("pri"), col("event_id"))

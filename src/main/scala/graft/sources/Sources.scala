@@ -1,8 +1,8 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.Versioned
 
 /** Source/sink surface mirrored from the reference container:
   *
@@ -44,55 +44,45 @@ object GridSource {
 }
 
 /** Persisted latest-forecast store with atomic swap: writers never
-  * leave a half-written "current" state (write to a versioned dir,
-  * then atomically repoint a marker file — the parquet analog of the
-  * reference's download-merge-upload of `w4h_data.nc`).
+  * leave a half-written "current" state (write a version directory,
+  * commit it, then atomically repoint the `CURRENT` marker — the
+  * parquet analog of the reference's download-merge-upload of
+  * `w4h_data.nc`). Versions are named by the caller; the commit,
+  * listing, marker swap and reclaim are [[graft.store.Versioned]]'s.
   */
-class ForecastStore(root: String) {
-  private val marker = Paths.get(root, "CURRENT")
+class ForecastStore(store: Versioned) {
+  def this(root: String) = this(Versioned(root))
 
-  def currentPath(): Option[String] =
-    if (Files.exists(marker))
-      Some(Paths.get(root, new String(Files.readAllBytes(marker)).trim).toString)
-    else None
+  private def current(): Option[String] = store.read("CURRENT").map(_.trim)
+
+  def currentPath(): Option[String] = current().map(store.path)
 
   def load(spark: SparkSession): Option[DataFrame] =
-    currentPath().flatMap(p =>
-      loadVersion(spark, Paths.get(p).getFileName.toString))
+    current().flatMap(loadVersion(spark, _))
 
   /** Write `df` as the new current version (atomic marker swap).
-    * Also writes the version's `_MANIFEST` — the sorted list of
-    * committed data files, the Iceberg-style source of truth orphan
-    * detection needs: a directory listing alone cannot tell a
-    * committed file from a failed task's leftover.
+    * The version's manifest is the sorted list of its committed data
+    * files, the Iceberg-style source of truth orphan detection needs:
+    * a directory listing alone cannot tell a committed file from a
+    * failed task's leftover.
     */
   def save(df: DataFrame, version: String): Unit = {
-    val dir = Paths.get(root, version)
-    df.write.mode("overwrite").parquet(dir.toString)
     // record RELATIVE paths, walked recursively — so a version
     // written with a nested/partitioned layout is fully manifested
     // and orphan reclaim can never mistake committed data for junk
-    def walk(d: java.io.File, rel: String): Seq[String] =
-      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { c =>
-        val r = if (rel.isEmpty) c.getName else s"$rel/${c.getName}"
-        if (c.isDirectory) walk(c, r)
-        else if (c.getName.endsWith(".parquet")) Seq(r)
-        else Seq.empty
+    def walk(rel: String): Seq[String] =
+      store.list(if (rel.isEmpty) version else s"$version/$rel").flatMap {
+        case (n, isDir) =>
+          val r = if (rel.isEmpty) n else s"$rel/$n"
+          if (isDir) walk(r)
+          else if (n.endsWith(".parquet")) Seq(r)
+          else Seq.empty
       }
-    val data = walk(dir.toFile, "").sorted
-    Files.write(dir.resolve("_MANIFEST"), data.mkString("\n").getBytes)
-    pointCurrent(version)
-  }
-
-  /** Atomically repoint the CURRENT marker (write-then-rename — a
-    * reader never sees a half-written marker). */
-  private def pointCurrent(version: String): Unit = {
-    val tmp = Paths.get(root, "CURRENT.tmp")
-    Files.createDirectories(Paths.get(root))
-    Files.write(tmp, version.getBytes)
-    Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
+    store.commit(version) { dir =>
+      df.write.mode("overwrite").parquet(dir)
+      walk("").sorted
+    }
+    store.replace("CURRENT", version)
   }
 
   /** ROLLBACK: repoint CURRENT to an EXISTING stored version —
@@ -105,12 +95,12 @@ class ForecastStore(root: String) {
     * exist — rollback must never invent a target.
     */
   def rollback(version: String): Boolean = {
-    if (!Files.isDirectory(Paths.get(root, version))) false
-    else { pointCurrent(version); true }
+    if (!store.isDir(version)) false
+    else { store.replace("CURRENT", version); true }
   }
 
   private def metaFile(n: String): Boolean =
-    n == "_MANIFEST" || n == "_SUCCESS" || n.endsWith(".crc")
+    n == Versioned.Manifest || n == "_SUCCESS" || n.endsWith(".crc")
 
   /** Store-relative paths no manifest references — failed-task
     * leftovers, stale side files, abandoned `_temporary` trees: the
@@ -120,31 +110,26 @@ class ForecastStore(root: String) {
     * manifest entry lives beneath it (manifests record relative
     * paths, so a nested/partitioned layout's data dirs are
     * protected and swept file-by-file instead); metadata files
-    * (CURRENT, _MANIFEST, _SUCCESS, .crc) are never orphans.
+    * (CURRENT, the manifest, _SUCCESS, .crc) are never orphans.
     * Detection is metadata-only — no data file is read.
     */
   def orphans(): Seq[String] = {
-    val rootLoose = Option(Paths.get(root).toFile.listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName != "CURRENT" && !metaFile(f.getName))
-      .map(_.getName).toSeq
+    val rootLoose = store.list("").collect {
+      case (n, false) if n != "CURRENT" && !metaFile(n) => n
+    }
     val inVersions = versions().map(_._1).flatMap { v =>
-      val dir = Paths.get(root, v)
-      val mf = dir.resolve("_MANIFEST")
-      if (!Files.exists(mf)) Seq.empty
-      else {
-        val listed = new String(Files.readAllBytes(mf))
-          .split("\n").filter(_.nonEmpty).toSet
-        def sweep(d: java.io.File, rel: String): Seq[String] =
-          Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap { c =>
-            val r = if (rel.isEmpty) c.getName else s"$rel/${c.getName}"
-            if (c.isDirectory) {
-              if (listed.exists(_.startsWith(r + "/"))) sweep(c, r)
+      store.manifest(v).toSeq.flatMap { mf =>
+        val listed = mf.toSet
+        def sweep(rel: String): Seq[String] =
+          store.list(if (rel.isEmpty) v else s"$v/$rel").flatMap { case (n, isDir) =>
+            val r = if (rel.isEmpty) n else s"$rel/$n"
+            if (isDir) {
+              if (listed.exists(_.startsWith(r + "/"))) sweep(r)
               else Seq(s"$v/$r")
-            } else if (metaFile(c.getName) || listed.contains(r)) Seq.empty
+            } else if (metaFile(n) || listed.contains(r)) Seq.empty
             else Seq(s"$v/$r")
           }
-        sweep(dir.toFile, "")
+        sweep("")
       }
     }
     (rootLoose ++ inVersions).sorted
@@ -156,10 +141,7 @@ class ForecastStore(root: String) {
     */
   def removeOrphans(): Seq[String] = {
     val os = orphans()
-    def rm(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-    }
-    os.foreach(rel => rm(Paths.get(root, rel).toFile))
+    os.foreach(store.delete)
     os
   }
 
@@ -173,36 +155,33 @@ class ForecastStore(root: String) {
     * which is the retention contract (keep N versions = N readable
     * points in time).
     */
-  def loadVersion(spark: SparkSession, version: String): Option[DataFrame] = {
-    val dir = Paths.get(root, version)
-    if (!Files.isDirectory(dir)) None
-    else {
-      val mf = dir.resolve("_MANIFEST")
-      if (Files.exists(mf)) {
-        // COMMITTED-READ semantics (the Iceberg reader contract):
-        // scan exactly the manifest-listed files, never the
-        // directory listing — so failed-task leftovers and
-        // half-written junk sitting next to committed data can
-        // neither corrupt nor crash a read (p17 proves this with
-        // planted orphans).
-        val files = new String(Files.readAllBytes(mf))
-          .split("\n").filter(_.nonEmpty).map(n => dir.resolve(n).toString)
-        Some(spark.read.parquet(files.toIndexedSeq: _*))
-      } else Some(spark.read.parquet(dir.toString))
-    }
-  }
+  def loadVersion(spark: SparkSession, version: String): Option[DataFrame] =
+    if (!store.isDir(version)) None
+    else Some(store.manifest(version) match {
+      // COMMITTED-READ semantics (the Iceberg reader contract):
+      // scan exactly the manifest-listed files, never the
+      // directory listing — so failed-task leftovers and
+      // half-written junk sitting next to committed data can
+      // neither corrupt nor crash a read (p17 proves this with
+      // planted orphans).
+      case Some(files) =>
+        spark.read.parquet(files.map(f => store.path(s"$version/$f")): _*)
+      case None => spark.read.parquet(store.path(version))
+    })
 
-  /** All readable version names, oldest first (vacuum's numeric-aware
-    * order), with the current one flagged.
+  /** Numeric-aware version order: "v10" must outrank "v2" (falls back
+    * to name order for non-v<N> version schemes). */
+  private def num(n: String): Long =
+    (if (n.startsWith("v")) n.drop(1) else n).toLongOption.getOrElse(Long.MinValue)
+
+  /** All readable version names, oldest first, with the current one
+    * flagged.
     */
   def versions(): Seq[(String, Boolean)] = {
-    val cur = currentPath().map(p => Paths.get(p).getFileName.toString)
-    def num(n: String): Long =
-      (if (n.startsWith("v")) n.drop(1) else n).toLongOption.getOrElse(Long.MinValue)
-    Option(Paths.get(root).toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .sortBy(f => (num(f.getName), f.getName))
-      .map(f => (f.getName, cur.contains(f.getName))).toSeq
+    val cur = current()
+    store.list("").collect { case (n, true) => n }
+      .sortBy(n => (num(n), n))
+      .map(n => (n, cur.contains(n)))
   }
 
   /** Delete all but the newest `keep` version directories, never the
@@ -211,29 +190,12 @@ class ForecastStore(root: String) {
     * an unbounded stream would otherwise accumulate forever). Safe
     * against readers of CURRENT: the marker is never repointed here,
     * and the current version is always retained regardless of age.
-    * Returns the removed version names.
+    * Returns the reclaimed version names.
     */
   def vacuum(keep: Int): Seq[String] = {
     require(keep >= 1, "must keep at least one version")
-    val cur = currentPath().map(p => Paths.get(p).getFileName.toString)
-    // numeric-aware order: "v10" must outrank "v2" (falls back to
-    // name order for non-v<N> version schemes)
-    def num(n: String): Long =
-      (if (n.startsWith("v")) n.drop(1) else n).toLongOption.getOrElse(Long.MinValue)
-    val dirs = Option(Paths.get(root).toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory)
-      .sortBy(f => (num(f.getName), f.getName))
-    val victims = dirs.dropRight(keep)
-      .filterNot(f => cur.contains(f.getName))
-    // recursive delete (a version dir may contain e.g. a _temporary
-    // subtree from an interrupted write), and report only versions
-    // that are actually gone — a survivor must not be listed as
-    // removed, or the caller's accounting diverges from disk.
-    def rmTree(f: java.io.File): Boolean = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      f.delete()
-    }
-    victims.filter(rmTree).map(_.getName).toSeq
+    val cur = current()
+    store.reclaim(versions().map(_._1).dropRight(keep).filterNot(cur.contains))
   }
 
   /** combine_first: prefer `fresh` rows, keep `previous` rows for keys

@@ -1773,7 +1773,7 @@ object EventStreams {
     * serving fleet actually deploys: the index trains ONCE on the
     * batch cluster and ships as a committed store version
     * ([[graft.operators.Knn.saveIndexVersion]] — per-component
-    * parquet + the _MANIFEST commit marker, written last); every
+    * parquet + the manifest commit marker); every
     * serving process BOOTSTRAPS from the newest committed version
     * ([[annDeleteStateFromStore]] — zero in-door index-build work,
     * the spec pins it with the
@@ -1809,14 +1809,12 @@ object EventStreams {
     graft.Tables.tsConfs(ss)
     // the BATCH TRAINER: one offline build, published as store v1 —
     // the only index construction outside the door's compaction
-    val root = java.nio.file.Files.createTempDirectory("graft_s43_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = graft.store.Versioned.tempRoot("graft_s43_")
     val ix0 = graft.operators.Knn.v21Static(ss, dir)
-    graft.operators.Knn.saveIndexVersion(ix0, root.getAbsolutePath)
+    graft.operators.Knn.saveIndexVersion(ix0, root)
     ix0.reps.unpersist()
     // the SERVING PROCESS: bootstrap from the committed store
-    val st = annDeleteStateFromStore(ss, dir, root.getAbsolutePath)
+    val st = annDeleteStateFromStore(ss, dir, root)
     val schema = ss.read.parquet(s"$dir/embeddings.parquet").schema
     val src = ss.readStream.schema(schema)
       .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
@@ -1908,10 +1906,7 @@ object EventStreams {
   private[graft] def replicaStorePath(ss: SparkSession, dir: String)
       : String =
     replicaStores.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_s44_")
-        .toFile
-      graft.operators.Incremental.cleanupOnExit(d)
-      val path = new java.io.File(d, "orders_replica").getAbsolutePath
+      val path = graft.store.Versioned.tempRoot("graft_s44_") + "/orders_replica"
       val p = graft.Tables.orders(ss, dir).selectExpr("o_orderkey",
         "o_custkey", "o_orderstatus", "o_orderpriority")
       graft.operators.Quality.dq8Replica(p).write.parquet(path)
@@ -2069,10 +2064,7 @@ object EventStreams {
       : ReplicaDiffState = {
     val p = graft.Tables.orders(ss, dir).selectExpr("o_orderkey",
       "o_custkey", "o_orderstatus", "o_orderpriority")
-    val rootF = java.nio.file.Files
-      .createTempDirectory("graft_s46_").toFile
-    graft.operators.Incremental.cleanupOnExit(rootF)
-    val root = rootF.getAbsolutePath
+    val root = graft.store.Versioned.tempRoot("graft_s46_")
     graft.operators.Quality.seedReplicaStore(p, root)
     val pDig = graft.operators.Quality.bucketDigest(p).localCheckpoint()
     val sDig = graft.operators.Quality
@@ -2088,7 +2080,7 @@ object EventStreams {
     * watermark arbitration, dq9's corrections for the convicted
     * buckets — and then the store actually HEALS: the corrections
     * publish the next store version (damaged partition groups
-    * rewritten, `repairlog` log, manifest-last — dq10's publish leg
+    * rewritten, `repairlog` log — dq10's publish leg
     * verbatim), and the low-water mark refreshes FROM THE STORE —
     * the rewritten partitions read back and re-digested (a bounded,
     * damage-proportional read), so the mark reflects what landed on
@@ -2151,7 +2143,7 @@ object EventStreams {
     * kept healing as replica rows land: per micro-batch the door
     * folds arrivals (s44), convicts at-the-mark divergent buckets,
     * derives dq9's corrections, PUBLISHES the next store version
-    * (dq10's partition-grain copy-on-write publish, manifest-last),
+    * (dq10's partition-grain copy-on-write publish),
     * and refreshes its low-water mark from the store's rewritten
     * partitions — so the next batch never re-convicts a healed
     * bucket, and a
@@ -2215,9 +2207,7 @@ object EventStreams {
     * seeds the identical store the query serves from. */
   private[graft] def annInsertStoreSeed(ss: SparkSession, dir: String)
       : String = {
-    val root = java.nio.file.Files.createTempDirectory("graft_s47_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = graft.store.Versioned.tempRoot("graft_s47_")
     val e = graft.operators.Knn.vectors(ss, dir)
     val insPred =
       s"vec_id >= 10 AND vec_id % ${graft.operators.Knn.v26ModK} = 0"
@@ -2226,9 +2216,9 @@ object EventStreams {
     val ix0 = graft.operators.Knn.V21Static(
       e.filter(s"NOT ($insPred)").select(col("vec_id"), col("nv")),
       g, reps.persist(), cents)
-    graft.operators.Knn.saveIndexVersion(ix0, root.getAbsolutePath)
+    graft.operators.Knn.saveIndexVersion(ix0, root)
     ix0.reps.unpersist()
-    root.getAbsolutePath
+    root
   }
 
   def s47(spark: SparkSession, dir: String): DataFrame = {
@@ -3007,7 +2997,6 @@ object EventStreams {
     val ss = streamSession(spark)
     graft.Tables.tsConfs(ss)
     val stage = java.nio.file.Files.createTempDirectory("graft_s14_").toFile
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_s14_store_").toFile
     val ev = ss.read.parquet(s"$dir/events.parquet")
     def half(name: String, pred: String, mtime: Long): Unit = {
       val outDir = new java.io.File(stage, name + ".tmp")
@@ -3023,7 +3012,8 @@ object EventStreams {
     half("b0_events.parquet", "event_id % 2 = 0", now)
     half("b1_events.parquet", "event_id % 2 = 1", now + 60000L)
     val schema = ss.read.parquet(s"${stage.getAbsolutePath}/b0_events.parquet").schema
-    val store = new graft.sources.ForecastStore(storeDir.getAbsolutePath)
+    val store = new graft.sources.ForecastStore(
+      graft.store.Versioned.tempRoot("graft_s14_store_"))
     val q = tsToTimestamp(ss.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(stage.getAbsolutePath))

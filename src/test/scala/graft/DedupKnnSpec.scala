@@ -648,30 +648,16 @@ class DedupKnnSpec extends AnyFunSuite {
     // propagation's last checkpoint without freeing it would leave
     // one persisted RDD per run behind until driver GC — three here,
     // beyond the slack (+ 2) the deep-graphs lineage test allows.
-    // getPersistentRDDs holds its RDDs weakly, so a GC during the runs
-    // could hide a leak: every job start pins the RDDs persisted so
-    // far, and only an unpersist takes one out of the map
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
-    val pin = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        sc.getPersistentRDDs.values.foreach(pinned.add)
+    val (_, before, after) = SharedSpark.withPinnedPersisted {
+      Seq(21, 24, 30).foreach { d =>
+        val path = spark.range(0, d).selectExpr("id AS src", "id + 1 AS dst")
+        val comps = Dedup.components(path, localMax = -1L)
+        val labels = comps.as[(Long, Long)].collect()
+        assert(labels.length == d + 1 && labels.forall(_._2 == 0L),
+          s"diameter-$d path is not one component rooted at 0")
+        graft.functions.Lineage.freeCheckpoint(comps)
+      }
     }
-    val before = sc.getPersistentRDDs.size
-    sc.addSparkListener(pin)
-    try Seq(21, 24, 30).foreach { d =>
-      val path = spark.range(0, d).selectExpr("id AS src", "id + 1 AS dst")
-      val comps = Dedup.components(path, localMax = -1L)
-      val labels = comps.as[(Long, Long)].collect()
-      assert(labels.length == d + 1 && labels.forall(_._2 == 0L),
-        s"diameter-$d path is not one component rooted at 0")
-      graft.functions.Lineage.freeCheckpoint(comps)
-    } finally {
-      SharedSpark.withJobCount(()) // drains the listener queue
-      sc.removeSparkListener(pin)
-    }
-    val after = sc.getPersistentRDDs.size
     assert(after <= before + 2,
       s"the stars fallback leaked persisted RDDs: $before -> $after")
   }
@@ -2006,8 +1992,7 @@ class DedupKnnSpec extends AnyFunSuite {
         r.getAs[Long]("vec_id"), r.getAs[Double]("cos_sim"),
         r.getAs[Long]("in_exact"))).toSeq
     // drive the lifecycle by hand for the structural pins
-    val root = Files.createTempDirectory("graft_v31_spec_").toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = new java.io.File(graft.store.Versioned.tempRoot("graft_v31_spec_"))
     val rootP = root.getAbsolutePath
     val e = Knn.vectors(spark, sf)
     val insPred = s"vec_id >= 10 AND vec_id % ${Knn.v26ModK} = 0"
@@ -2114,8 +2099,7 @@ class DedupKnnSpec extends AnyFunSuite {
     val batch = parse(Knn.v21(spark, sf)).sorted
     assert(viaQuorum == batch && viaQuorum.nonEmpty)
     // kernel pins on synthetic three-replica stores
-    val base = Files.createTempDirectory("graft_v32spec_").toFile
-    graft.operators.Incremental.cleanupOnExit(base)
+    val base = new java.io.File(graft.store.Versioned.tempRoot("graft_v32spec_"))
     val roots = Seq("r1", "r2", "r3").map(nm =>
       new java.io.File(base, nm).getAbsolutePath)
     val vecs = (0L until 50L).map(i => (i, Array(i.toDouble)))

@@ -149,9 +149,7 @@ class PlanSpec extends AnyFunSuite {
     // not the table)
     val p = Tables.orders(spark, sf).selectExpr("o_orderkey",
       "o_custkey", "o_orderstatus", "o_orderpriority")
-    val rootF = java.nio.file.Files
-      .createTempDirectory("graft_dq10plan_").toFile
-    graft.operators.Incremental.cleanupOnExit(rootF)
+    val rootF = new java.io.File(graft.store.Versioned.tempRoot("graft_dq10plan_"))
     val root = rootF.getAbsolutePath
     Q.seedStoreFrom(Q.dq8Replica(p), root)
     Q.repairPass(spark, root, p)

@@ -218,29 +218,29 @@ class PropertySpec extends AnyFunSuite {
       .selectExpr("id",
         "CASE WHEN id = 0 THEN id ELSE id - 1 END AS ptr",
         "CAST(CASE WHEN id = 0 THEN 0 ELSE 1 END AS BIGINT) AS dist")
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
-    val (state, jRounds, jConv) =
-      graft.relational.Relational.pointerJump(init, 16)
-    assert(jConv, s"pointerJump no convergence in 16 rounds (ran $jRounds)")
-    assert(jRounds >= 12 && jRounds <= 13, s"pointerJump ran $jRounds rounds")
-    val deep = state.filter($"id" === n).as[(Long, Long, Long)].collect().head
-    assert(deep == ((n, 0L, n)))
-    graft.functions.Lineage.freeCheckpoint(state)
-    // ccPropagate: min-label spreads ONE hop per round, so a 14-edge
-    // path graph needs diameter = 14 rounds + 1 detection = 15 —
-    // inside d6's 20-round budget only because lineage is cut.
-    val chain = spark.range(0, 14).selectExpr("id AS src", "id + 1 AS dst")
-    val (lbl, pRounds, pConv) = graft.operators.Dedup.ccPropagate(chain, 20)
-    assert(pConv, s"ccPropagate no convergence in 20 rounds (ran $pRounds)")
-    assert(pRounds >= 12, s"ccPropagate ran only $pRounds rounds")
-    val labels = lbl.as[(Long, Long)].collect()
-    assert(labels.length == 15 && labels.forall(_._2 == 0L))
-    graft.functions.Lineage.freeCheckpoint(lbl)
+    val (_, persistedBefore, persistedAfter) = SharedSpark.withPinnedPersisted {
+      val (state, jRounds, jConv) =
+        graft.relational.Relational.pointerJump(init, 16)
+      assert(jConv, s"pointerJump no convergence in 16 rounds (ran $jRounds)")
+      assert(jRounds >= 12 && jRounds <= 13, s"pointerJump ran $jRounds rounds")
+      val deep = state.filter($"id" === n).as[(Long, Long, Long)].collect().head
+      assert(deep == ((n, 0L, n)))
+      graft.functions.Lineage.freeCheckpoint(state)
+      // ccPropagate: min-label spreads ONE hop per round, so a 14-edge
+      // path graph needs diameter = 14 rounds + 1 detection = 15 —
+      // inside d6's 20-round budget only because lineage is cut.
+      val chain = spark.range(0, 14).selectExpr("id AS src", "id + 1 AS dst")
+      val (lbl, pRounds, pConv) = graft.operators.Dedup.ccPropagate(chain, 20)
+      assert(pConv, s"ccPropagate no convergence in 20 rounds (ran $pRounds)")
+      assert(pRounds >= 12, s"ccPropagate ran only $pRounds rounds")
+      val labels = lbl.as[(Long, Long)].collect()
+      assert(labels.length == 15 && labels.forall(_._2 == 0L))
+      graft.functions.Lineage.freeCheckpoint(lbl)
+    }
     // BLOCKS, not just plans: Dataset.unpersist() cannot see a
     // localCheckpoint, so without Lineage.freeCheckpoint the ~28
     // rounds above would leave ~28 persisted state RDDs behind
     // (ccPropagate's cached `und` is released lazily, hence + 2 slack)
-    val persistedAfter = spark.sparkContext.getPersistentRDDs.size
     assert(persistedAfter <= persistedBefore + 2,
       s"iterative rounds leaked persisted RDDs: $persistedBefore -> $persistedAfter")
   }

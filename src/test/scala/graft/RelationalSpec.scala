@@ -2997,9 +2997,7 @@ class RelationalSpec extends AnyFunSuite {
     // drive the store kernels directly for the structural pins
     val p = Tables.orders(spark, sf).selectExpr("o_orderkey",
       "o_custkey", "o_orderstatus", "o_orderpriority")
-    val rootF = java.nio.file.Files
-      .createTempDirectory("graft_dq10spec_").toFile
-    graft.operators.Incremental.cleanupOnExit(rootF)
+    val rootF = new java.io.File(graft.store.Versioned.tempRoot("graft_dq10spec_"))
     val root = rootF.getAbsolutePath
     Q.seedReplicaStore(p, root)
     val n1 = Q.repairPass(spark, root, p)
@@ -3047,9 +3045,7 @@ class RelationalSpec extends AnyFunSuite {
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
     val extra = p0.unionByName(Seq((7L, 11L, "F", "2-HIGH"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"))
-    val root2F = java.nio.file.Files
-      .createTempDirectory("graft_dq10spec2_").toFile
-    graft.operators.Incremental.cleanupOnExit(root2F)
+    val root2F = new java.io.File(graft.store.Versioned.tempRoot("graft_dq10spec2_"))
     val root2 = root2F.getAbsolutePath
     Q.seedStoreFrom(extra, root2)
     assert(Q.repairPass(spark, root2, p0) == 1L)
@@ -3135,9 +3131,7 @@ class RelationalSpec extends AnyFunSuite {
     // kernel drive for the structural pins
     val p = Tables.orders(spark, sf).selectExpr("o_orderkey",
       "o_custkey", "o_orderstatus", "o_orderpriority")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_dq12spec_").toFile
-    graft.operators.Incremental.cleanupOnExit(base)
+    val base = new java.io.File(graft.store.Versioned.tempRoot("graft_dq12spec_"))
     val roots = Seq("r1", "r2", "r3").map(nm =>
       new java.io.File(base, nm).getAbsolutePath)
     Q.dq11Replicas(p).zip(roots).foreach { case ((_, r), root) =>
@@ -3173,9 +3167,7 @@ class RelationalSpec extends AnyFunSuite {
     // a NEVER-CONVICTED root has no repairlog under its serving
     // version — the log read must skip it, not throw (advice
     // regression: only one replica defective, two agree)
-    val base2 = java.nio.file.Files
-      .createTempDirectory("graft_dq12one_").toFile
-    graft.operators.Incremental.cleanupOnExit(base2)
+    val base2 = new java.io.File(graft.store.Versioned.tempRoot("graft_dq12one_"))
     val roots2 = Seq("r1", "r2", "r3").map(nm =>
       new java.io.File(base2, nm).getAbsolutePath)
     Q.seedStoreFrom(Q.dq11Replicas(p).head._2, roots2(0)) // defective
@@ -3223,9 +3215,7 @@ class RelationalSpec extends AnyFunSuite {
     val p = Tables.orders(spark, sf).selectExpr(cols: _*)
     val p2 = Tables.orders(spark, sf).selectExpr(
       (cols :+ "CAST(floor(o_totalprice) AS BIGINT) AS o_price_floor"): _*)
-    val rootF = java.nio.file.Files
-      .createTempDirectory("graft_dq13spec_").toFile
-    graft.operators.Incremental.cleanupOnExit(rootF)
+    val rootF = new java.io.File(graft.store.Versioned.tempRoot("graft_dq13spec_"))
     val root = rootF.getAbsolutePath
     Q.seedReplicaStore(p, root)
     assert(Q.repairPass(spark, root, p2) > 0L)
@@ -3259,9 +3249,7 @@ class RelationalSpec extends AnyFunSuite {
     // fileless data directory once repairs rotate the seed out of
     // the manifest — the per-version _SCHEMA keeps it servable
     // (schema inference on the fileless version used to throw)
-    val root2F = java.nio.file.Files
-      .createTempDirectory("graft_dq13spec2_").toFile
-    graft.operators.Incremental.cleanupOnExit(root2F)
+    val root2F = new java.io.File(graft.store.Versioned.tempRoot("graft_dq13spec2_"))
     val root2 = root2F.getAbsolutePath
     Q.seedStoreFrom(p.limit(5), root2)
     val sch = Q.readStoreSchema(spark, root2, 1)

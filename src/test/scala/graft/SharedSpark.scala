@@ -48,4 +48,29 @@ object SharedSpark {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Runs `f` and returns its result with the number of persisted
+    * RDDs before and after it. `getPersistentRDDs` holds its RDDs
+    * weakly, so a GC during `f` could hide a leak: every job start
+    * pins the RDDs persisted so far, and only an unpersist takes one
+    * out of the map.
+    */
+  def withPinnedPersisted[T](f: => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val pin = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sc.getPersistentRDDs.values.foreach(pinned.add)
+    }
+    val before = sc.getPersistentRDDs.size
+    sc.addSparkListener(pin)
+    val out = try f finally {
+      withJobCount(()) // drains the listener queue
+      sc.removeSparkListener(pin)
+    }
+    val after = sc.getPersistentRDDs.size
+    java.lang.ref.Reference.reachabilityFence(pinned)
+    (out, before, after)
+  }
 }

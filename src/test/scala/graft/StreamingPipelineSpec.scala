@@ -291,7 +291,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   test("s14 merge sink: replayed batch is a no-op; merged state equals global aggregate") {
     import spark.implicits._
     val store = new graft.sources.ForecastStore(
-      java.nio.file.Files.createTempDirectory("graft_s14_spec_").toString)
+      graft.store.Versioned.tempRoot("graft_s14_spec_"))
     def batch(rows: (Long, Long, Long, Double)*): org.apache.spark.sql.DataFrame =
       rows.toSeq.toDF("user_id", "tus", "event_id", "value")
         .withColumn("ts", timestamp_micros($"tus")).drop("tus")
@@ -323,7 +323,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   test("ForecastStore.vacuum keeps the newest versions numerically and never CURRENT") {
     import spark.implicits._
     val store = new graft.sources.ForecastStore(
-      java.nio.file.Files.createTempDirectory("graft_vac_").toString)
+      graft.store.Versioned.tempRoot("graft_vac_"))
     (0 to 10).foreach { i =>
       store.save(Seq((i.toLong, i.toLong)).toDF("k", "v"), s"v$i")
     }
@@ -1365,9 +1365,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     val batch = rows(graft.operators.Knn.v28(spark, sf)).sorted
     assert(streamed == batch && streamed.nonEmpty)
     // kernel: the batch trainer publishes v1
-    val root = java.nio.file.Files.createTempDirectory("graft_s43spec_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = new java.io.File(graft.store.Versioned.tempRoot("graft_s43spec_"))
     val ix0 = graft.operators.Knn.v21Static(spark, sf)
     assert(graft.operators.Knn.saveIndexVersion(
       ix0, root.getAbsolutePath) == 1)
@@ -1442,9 +1440,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     // a store with HISTORY: three trainer publishes (v1..v3 — the
     // periodic-refresh shape) plus a dead torn v4 left by a crashed
     // publish; the door bootstraps from v3
-    val root = java.nio.file.Files.createTempDirectory("graft_s43vac_")
-      .toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = new java.io.File(graft.store.Versioned.tempRoot("graft_s43vac_"))
     val rootP = root.getAbsolutePath
     val ix0 = graft.operators.Knn.v21Static(spark, sf)
     (1 to 3).foreach { i =>
@@ -1573,9 +1569,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     val baseGraph = (0L until baseN)
       .flatMap(i => Seq((i, (i + 1) % baseN), ((i + 1) % baseN, i)))
       .toDF("src_id", "nbr_id").localCheckpoint()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_s47vol_").toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = new java.io.File(graft.store.Versioned.tempRoot("graft_s47vol_"))
     val rootP = root.getAbsolutePath
     val cents1 = Array((0L, Array(0.0)))
     assert(graft.operators.Knn.saveIndexVersion(
@@ -1625,9 +1619,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     val baseGraph = (0L until baseN)
       .flatMap(i => Seq((i, (i + 1) % baseN), ((i + 1) % baseN, i)))
       .toDF("src_id", "nbr_id").localCheckpoint()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_s47mix_").toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = new java.io.File(graft.store.Versioned.tempRoot("graft_s47mix_"))
     val rootP = root.getAbsolutePath
     val cents1 = Array((0L, Array(0.0)))
     graft.operators.Knn.saveIndexVersion(
@@ -1750,9 +1742,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
       .flatMap(i => Seq((i, (i + 1) % baseN), ((i + 1) % baseN, i)))
       .toDF("src_id", "nbr_id").localCheckpoint()
     val cents1 = Array((0L, Array(0.0)))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_s48fold_").toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = new java.io.File(graft.store.Versioned.tempRoot("graft_s48fold_"))
     val rootP = root.getAbsolutePath
     graft.operators.Knn.saveIndexVersion(
       graft.operators.Knn.V21Static(baseVecs, baseGraph, baseVecs,
@@ -1798,9 +1788,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     val baseGraph = (0L until baseN)
       .flatMap(i => Seq((i, (i + 1) % baseN), ((i + 1) % baseN, i)))
       .toDF("src_id", "nbr_id").localCheckpoint()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_s47fold_").toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = new java.io.File(graft.store.Versioned.tempRoot("graft_s47fold_"))
     val rootP = root.getAbsolutePath
     val cents1 = Array((0L, Array(0.0)))
     graft.operators.Knn.saveIndexVersion(
@@ -1847,9 +1835,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     // folded set already sits ABOVE corpus/denom — the advice
     // scenario: every freshly-bootstrapped sibling in a fleet would
     // otherwise fire the full-corpus rebuild on its first batch
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_s43primed_").toFile
-    graft.operators.Incremental.cleanupOnExit(root)
+    val root = new java.io.File(graft.store.Versioned.tempRoot("graft_s43primed_"))
     val rootP = root.getAbsolutePath
     val ix0 = graft.operators.Knn.v21Static(spark, sf)
     graft.operators.Knn.saveIndexVersion(ix0, rootP)
