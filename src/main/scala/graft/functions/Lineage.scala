@@ -23,7 +23,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Lineage {
   def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: LogicalRDD => lr
-    }.foreach(_.rdd.unpersist(blocking = false))
+    checkpoints(df).foreach(_.rdd.unpersist(blocking = false))
+
+  /** Frees the checkpoints `df` reads that `keep` does not read: the
+    * ones a call made on top of an input the caller still owns.
+    */
+  def freeCheckpoint(df: DataFrame, keep: DataFrame): Unit = {
+    val kept = checkpoints(keep).map(_.rdd.id).toSet
+    checkpoints(df).filterNot(lr => kept(lr.rdd.id))
+      .foreach(_.rdd.unpersist(blocking = false))
+  }
+
+  private def checkpoints(df: DataFrame): Seq[LogicalRDD] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr }
 }

@@ -570,7 +570,10 @@ object Dedup {
 
   def d6(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    components(d6Edges(spark, dir).cache())
+    val edges = d6Edges(spark, dir).cache()
+    val labels = components(edges) // never reads `edges` (its scaladoc)
+    edges.unpersist()
+    labels
       .groupBy($"lbl".as("component"))
       .agg(count(lit(1)).as("size"), min($"id").as("canonical_id"))
       .transform(graft.Tables.ordered(_, $"component"))
@@ -595,6 +598,10 @@ object Dedup {
     * budget. NO SILENT CAPS: a propagation that hits it has its labels
     * freed and the log-round star contraction runs instead; a stars
     * cap-out is a hard error, never a wrong answer.
+    *
+    * The labels never read `edges`: they are driver-local or a local
+    * checkpoint the caller owns, so the caller may free `edges` as
+    * soon as this returns.
     */
   private[graft] def components(edges: DataFrame,
       localMax: Long = Bounded.smallBudget): DataFrame =
@@ -604,7 +611,11 @@ object Dedup {
         graft.functions.Lineage.freeCheckpoint(l)
         val (s, _, conv) = ccStars(edges, 50, localMax)
         require(conv, "ccStars fallback did not converge within 50 rounds")
-        s
+        // the stars' labels are built lazily over `edges` (and, on the
+        // distributed path, over their last round's checkpoint, freed here)
+        val out = s.localCheckpoint()
+        graft.functions.Lineage.freeCheckpoint(s, keep = edges)
+        out
     }
 
   /** Min-label propagation over an undirected edge list (src, dst):
@@ -1352,7 +1363,10 @@ object Dedup {
   def d13Apply(verifiedPairs: DataFrame): DataFrame = {
     val spark = verifiedPairs.sparkSession
     import spark.implicits._
-    components(verifiedPairs.localCheckpoint()).select($"id".as("doc_id"), $"lbl".as("root"))
+    val pairs = verifiedPairs.localCheckpoint()
+    val labels = components(pairs)
+    graft.functions.Lineage.freeCheckpoint(pairs) // the labels never read it
+    labels.select($"id".as("doc_id"), $"lbl".as("root"))
       .withColumn("kept", ($"doc_id" === $"root").cast("long"))
       .transform(graft.Tables.ordered(_, $"doc_id"))
   }

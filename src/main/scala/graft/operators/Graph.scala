@@ -1940,7 +1940,8 @@ object Graph {
   def g23(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (nodes, edges) = g18Fixture(spark, dir)
-    val labs = sccLabels(nodes, edges).localCheckpoint()
+    val scc = sccLabels(nodes, edges)
+    val labs = scc.localCheckpoint()
     val cel = edges
       .join(labs.select($"id".as("src"), $"scc".as("sa")), Seq("src"))
       .join(labs.select($"id".as("dst"), $"scc".as("sb")), Seq("dst"))
@@ -1956,12 +1957,18 @@ object Graph {
     }
     val outd = cel.groupBy($"sa".as("scc")).agg(count(lit(1)).as("out_deg"))
     val ind = cel.groupBy($"sb".as("scc")).agg(count(lit(1)).as("in_deg"))
-    sz.join(outd, Seq("scc"), "left").join(ind, Seq("scc"), "left")
+    // materialized, so every frame it was built from can be freed:
+    // the returned checkpoint is the only one the call leaves
+    val out = sz.join(outd, Seq("scc"), "left").join(ind, Seq("scc"), "left")
       .join(lvl, Seq("scc"))
       .selectExpr("scc", "scc_size",
         "coalesce(out_deg, CAST(0 AS BIGINT)) AS out_deg",
         "coalesce(in_deg, CAST(0 AS BIGINT)) AS in_deg", "depth")
-      .transform(graft.Tables.ordered(_, $"scc"))
+      .localCheckpoint()
+    Seq(scc, labs, cel, lvl).foreach(graft.functions.Lineage.freeCheckpoint)
+    nodes.unpersist()
+    edges.unpersist()
+    out.transform(graft.Tables.ordered(_, $"scc"))
   }
 
   /** g23 oracle: g18's labeling chain + condensation edges + the

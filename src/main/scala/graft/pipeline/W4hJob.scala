@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{Lineage, ThermalChain}
+import graft.functions.{Lineage, ThermalChain, ThermalKernel}
 import graft.sources.ForecastStore
 
 /** The reference container's full run (/root/reference/main.py:30-453)
@@ -69,6 +69,24 @@ object W4hJob {
     }
   }
 
+  /** The thermal grid (main.py:77-207): per (lat, lon, aoff) cell, the
+    * max of each [[ThermalChain]] output the job keeps. The chain's
+    * base projection feeds one [[ThermalKernel]] call per event, so
+    * the grid plans a handful of expressions instead of the chain's 30
+    * layers, and its generated code keeps every method small enough
+    * for the JIT. The values are the chain's, bit for bit.
+    */
+  private[graft] def thermalGrid(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Tables.events(spark, dir)
+      .selectExpr(ThermalChain.base.map { case (n, e) => s"($e) AS $n" }: _*)
+      .select($"lat", $"lon",
+        ThermalKernel($"lat", $"lon", $"doy", $"hh", $"mv").as("k"))
+      .groupBy($"lat", $"lon", $"k.aoff".as("aoff"))
+      .agg(max($"k.tmp2m").as("tmp2m"), max($"k.utci_c").as("utci_c"),
+        max($"k.wbgt_c").as("wbgt_c"), max($"k.encoded").as("encoded"))
+  }
+
   /** `nowHour` anchors the run on the aoff axis (the reference uses
     * `pd.Timestamp.utcnow()`); -1 derives it from the new forecast's
     * first hour + 1 — "the run happens as the new forecast lands".
@@ -76,11 +94,11 @@ object W4hJob {
     * The aggregated thermal grid is materialized once, with an eager
     * `localCheckpoint()`, before anything reads it. Otherwise the
     * anchor's `min(aoff)` would be a second scan of the events
-    * through the whole chain, and every later stage whose lineage
+    * through the thermal kernel, and every later stage whose lineage
     * holds the grid's aggregate (merge + cache fill, docs, daily
-    * extremes, store write) would ship the 30-layer thermal plan in
-    * its task binary (`HashAggregateExec` keeps a reference to its
-    * plan). The trade-off: checkpoint blocks live only on the
+    * extremes, store write) would ship the events scan and the
+    * grid's plan in its task binary (`HashAggregateExec` keeps a
+    * reference to its plan). The trade-off: checkpoint blocks live only on the
     * executors that computed them, so on a cluster a lost executor
     * after the checkpoint fails the run instead of recomputing the
     * grid. `Alert.fail` fires, the lock is released and the next
@@ -101,11 +119,7 @@ object W4hJob {
 
       // ---- compute thermal indices + encoded series (main.py:77-207),
       // materialized once (why: `run`'s scaladoc)
-      grid = ThermalChain.df(spark, dir, ThermalChain.full)
-        .groupBy($"lat", $"lon", $"aoff")
-        .agg(max($"tmp2m").as("tmp2m"), max($"utci_c").as("utci_c"),
-          max($"wbgt_c").as("wbgt_c"), max($"encoded").as("encoded"))
-        .localCheckpoint()
+      grid = thermalGrid(spark, dir).localCheckpoint()
 
       // ---- time anchors + merge over the previous run (main.py:219-250)
       val minNewAoff = grid.agg(min($"aoff")).head().getLong(0)

@@ -85,7 +85,7 @@ class ChartPngSpec extends AnyFunSuite {
   test("renderAll: one file per (day, vertex), pixel-exact, callback in sorted order after each file lands") {
     import spark.implicits._
     val r = raster(days = 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pngs").resolve("out")
+    val dir = java.nio.file.Paths.get(graft.store.Versioned.tempRoot("graft_pngs")).resolve("out")
     val seen = Seq.newBuilder[(Long, String)]
     val n = graft.operators.ChartPng.renderAll(r, dir, "gfs20240101_00z") { (day, name) =>
       assert(java.nio.file.Files.isRegularFile(dir.resolve(name)), s"$name not on disk yet")
@@ -118,7 +118,7 @@ class ChartPngSpec extends AnyFunSuite {
   }
 
   test("renderAll's Spark job count does not grow with the chart count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pngjobs")
+    val dir = java.nio.file.Paths.get(graft.store.Versioned.tempRoot("graft_pngjobs"))
     def render(days: Int) = {
       val r = raster(days)
       withJobCount(graft.operators.ChartPng.renderAll(r, dir.resolve(s"d$days"), "v")((_, _) => ()))

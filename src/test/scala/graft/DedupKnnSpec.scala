@@ -662,6 +662,38 @@ class DedupKnnSpec extends AnyFunSuite {
       s"the stars fallback leaked persisted RDDs: $before -> $after")
   }
 
+  test("d6 leaves no persisted RDD behind") {
+    val (rows, left) = SharedSpark.leftPersisted(Dedup.d6(spark, sf).collect())
+    assert(rows.nonEmpty)
+    assert(left.isEmpty, s"d6 left persisted RDDs: ${left.keys}")
+  }
+
+  test("d13Apply leaves no persisted RDD behind") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("src", "dst")
+    val (rows, left) = SharedSpark.leftPersisted(Dedup.d13Apply(pairs).collect())
+    assert(rows.length == 5)
+    assert(left.isEmpty, s"d13Apply left persisted RDDs: ${left.keys}")
+  }
+
+  test("d13Apply over a path beyond propagation's round budget: labels outlive the freed pairs") {
+    // 25 pairs on a 26-node path: diameter 25 > 20 rounds, so the
+    // labels come from the stars fallback, which d13Apply's freed
+    // pairs checkpoint must not feed
+    val pairs = spark.range(0, 25).selectExpr("id AS src", "id + 1 AS dst")
+    val (out, left) = SharedSpark.leftPersisted {
+      val applied = Dedup.d13Apply(pairs)
+      val rows = applied.collect()
+      assert(rows.map(_.getAs[Long]("doc_id")).toSeq == (0L to 25L))
+      assert(rows.forall(_.getAs[Long]("root") == 0L))
+      assert(rows.map(_.getAs[Long]("kept")).sum == 1L)
+      applied
+    }
+    // the only RDD left is the labels' checkpoint the result reads
+    assert(left.size == 1, s"d13Apply left persisted RDDs: ${left.keys}")
+    graft.functions.Lineage.freeCheckpoint(out)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(left.keys.head))
+  }
+
   test("d12: planted substring is recalled in every seeded doc, spans merge") {
     val rows = Dedup.d12(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_spans"),
@@ -1957,7 +1989,7 @@ class DedupKnnSpec extends AnyFunSuite {
       intercept[IllegalArgumentException](Knn.vacuumIndexStore(rootP, 0))
       // an all-torn store is untouched wholesale: the only torn dir
       // may be a FIRST publish in flight
-      val root2 = Files.createTempDirectory("graft_v30_spec2_").toString
+      val root2 = graft.store.Versioned.tempRoot("graft_v30_spec2_")
       val d2 = new java.io.File(root2, "v1"); d2.mkdirs()
       Files.write(d2.toPath.resolve("part-00000.parquet"), Array[Byte](1))
       assert(Knn.vacuumIndexStore(root2, 1).isEmpty && d2.exists(),
@@ -2042,7 +2074,7 @@ class DedupKnnSpec extends AnyFunSuite {
     assert(parse(Knn.v21ServeBatch(Knn.loadAnnStoreLsm(spark, rootP)._1,
       qs)).sorted == viaStore, "a torn segment must never serve")
     // kind-aware vacuum on a synthetic mixed store
-    val r2 = Files.createTempDirectory("graft_v31_spec2_").toString
+    val r2 = graft.store.Versioned.tempRoot("graft_v31_spec2_")
     def mk(name: String, kind: String): Unit = {
       val d = new java.io.File(r2, name); d.mkdirs()
       Files.write(d.toPath.resolve("part-00000.parquet"), Array[Byte](1))

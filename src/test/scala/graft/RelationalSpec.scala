@@ -2177,6 +2177,17 @@ class RelationalSpec extends AnyFunSuite {
   }
 
 
+  test("g23 leaves one persisted RDD behind: the checkpoint it returns") {
+    val (out, left) = SharedSpark.leftPersisted {
+      val g = graft.operators.Graph.g23(spark, sf)
+      assert(g.count() > 0)
+      g
+    }
+    assert(left.size == 1, s"g23 left persisted RDDs: ${left.keys}")
+    graft.functions.Lineage.freeCheckpoint(out)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(left.keys.head))
+  }
+
   test("g23: condensation DAG equals a sequential recompute and is a fixpoint") {
     val got = graft.operators.Graph.g23(spark, sf).collect()
       .map(r => (r.getAs[Long]("scc"), r.getAs[Long]("scc_size"),

@@ -73,4 +73,18 @@ object SharedSpark {
     java.lang.ref.Reference.reachabilityFence(pinned)
     (out, before, after)
   }
+
+  /** Runs `f` under [[withPinnedPersisted]] and returns its result
+    * with the RDDs it persisted and left persisted, by id. RDDs that
+    * earlier specs left behind do not count, so a GC dropping one of
+    * them during `f` cannot skew the answer.
+    */
+  def leftPersisted[T](f: => T): (T, Map[Int, AnyRef]) = {
+    val sc = spark.sparkContext
+    val mark = sc.emptyRDD[Unit].id
+    withPinnedPersisted {
+      val out = f
+      (out, sc.getPersistentRDDs.filter(_._1 > mark).toMap[Int, AnyRef])
+    }._1
+  }
 }

@@ -8,7 +8,7 @@ class SourcesSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
   val sf = SharedSpark.sf
 
-  private def tmp() = java.nio.file.Files.createTempDirectory("graft_src").toString
+  private def tmp() = graft.store.Versioned.tempRoot("graft_src")
 
   private def grid() = {
     import spark.implicits._
@@ -333,7 +333,7 @@ class SourcesSpec extends AnyFunSuite {
       .select($"l_orderkey", $"l_partkey", $"l_quantity", $"l_shipdate")
     val want = src.collect().map(_.toSeq).toSet
     Seq("snappy" -> "snappy", "gzip" -> "gz", "zstd" -> "zstd").foreach { case (codec, ext) =>
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_codec_$codec").toString
+      val dir = graft.store.Versioned.tempRoot(s"graft_codec_$codec")
       src.write.mode("overwrite").option("compression", codec).parquet(dir)
       val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
       assert(files.nonEmpty)
@@ -347,7 +347,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("dynamic partition overwrite replaces only the written partitions") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpo_").toString
+    val dir = graft.store.Versioned.tempRoot("graft_dpo_")
     val writer = spark.conf
     writer.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {

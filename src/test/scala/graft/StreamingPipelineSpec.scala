@@ -48,7 +48,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   test("s2 recovers sessionizer state from a checkpoint restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = graft.store.Versioned.tempRoot("graft_ckpt")
     val mem = MemoryStream[Ev]
     val got = new java.util.concurrent.ConcurrentLinkedQueue[SessOut]()
     def start() = EventStreams.sessionize(mem.toDS())
@@ -183,7 +183,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx = ns.sqlContext
     import ns.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tws_ckpt").toString
+    val ckpt = graft.store.Versioned.tempRoot("graft_tws_ckpt")
     val mem = MemoryStream[RecEv]
     val got = new java.util.concurrent.ConcurrentLinkedQueue[TopOut]()
     def start() = EventStreams.topkStream(mem.toDS())
@@ -443,7 +443,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val H = 3600L * 1000000L
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_s12").toString
+    val ckpt = graft.store.Versioned.tempRoot("graft_ckpt_s12")
     val mem = MemoryStream[(Long, String, Long)] // (user_id, event_type, tus)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
     def start() = EventStreams.chainedDedupWindow(
@@ -731,7 +731,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
 
   test("foreachBatch chunked file sink writes every event exactly once") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_fsink").toString
+    val out = graft.store.Versioned.tempRoot("graft_fsink")
     graft.Tables.tsConfs(spark)
     val schema = spark.read.parquet(s"$sf/events.parquet").schema
     val src = spark.readStream.schema(schema)
@@ -751,7 +751,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
 
   test("ChunkedSink fallback: oversize chunks split until they fit, no loss") {
     import spark.implicits._
-    val outDir = java.nio.file.Files.createTempDirectory("graft_fb").toString
+    val outDir = graft.store.Versioned.tempRoot("graft_fb")
     val ds = spark.range(0, 100).map(_.toLong)
     val n = graft.pipeline.ChunkedSink.writeWithFallback(
       ds.repartition(2), chunkSize = 16, tries = 1, splits = 4) {
@@ -816,7 +816,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
   }
 
   test("StatusStore: lock and dotted-field semantics") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_status").toString
+    val dir = graft.store.Versioned.tempRoot("graft_status")
     val st = new StatusStore(dir)
     assert(st.tryAcquireUpdateLock())
     assert(!st.tryAcquireUpdateLock()) // held
@@ -833,7 +833,7 @@ class StreamingPipelineSpec extends AnyFunSuite {
 
   test("ChunkedSink: every row written exactly once, in bounded chunks") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink")
+    val dir = java.nio.file.Paths.get(graft.store.Versioned.tempRoot("graft_sink"))
     val dirStr = dir.toString // Path is not serializable; capture a String
     val n = 1000
     val ds = spark.range(n).map(_.toString)

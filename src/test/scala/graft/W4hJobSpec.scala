@@ -9,7 +9,7 @@ class W4hJobSpec extends AnyFunSuite {
   val sf = SharedSpark.sf
 
   test("full job: compute, merge, mask, upload, charts, status") {
-    val root = java.nio.file.Files.createTempDirectory("w4h_job").toString
+    val root = graft.store.Versioned.tempRoot("w4h_job")
 
     val r1 = W4hJob.run(spark, sf, root, "gfs20240101_00z")
     assert(r1.outcome == "completed")
@@ -93,12 +93,12 @@ class W4hJobSpec extends AnyFunSuite {
     // scanned at most twice by one stage), then give every other
     // stage fewer records, so a stage that reads exactly nEvents
     // records is an events scan
-    val data = Files.createTempDirectory("w4h_data")
+    val data = Paths.get(graft.store.Versioned.tempRoot("w4h_data"))
     val ev = Tables.load(spark, sf, "events")
     ev.union(ev).union(ev).write.parquet(s"$data/events.parquet")
     Files.createSymbolicLink(data.resolve("part.parquet"), Paths.get(s"$sf/part.parquet"))
     val nEvents = 3 * ev.count()
-    val root = Files.createTempDirectory("w4h_scan").toString
+    val root = graft.store.Versioned.tempRoot("w4h_scan")
     val (r, reads) = withFileScanReads(W4hJob.run(spark, data.toString, root, "gfs20240101_00z"))
     assert(r.get.outcome == "completed")
     // the anchor, merge, docs, charts and store write all read the
@@ -110,7 +110,7 @@ class W4hJobSpec extends AnyFunSuite {
   test("a completed or failed run leaves nothing persisted and the lock released") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val ok = java.nio.file.Files.createTempDirectory("w4h_life").toString
+    val ok = graft.store.Versioned.tempRoot("w4h_life")
     assert(W4hJob.run(spark, sf, ok, "gfs20240101_00z").outcome == "completed")
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       s"a completed run left persisted RDDs: ${sc.getPersistentRDDs.keySet -- before}")
@@ -118,7 +118,7 @@ class W4hJobSpec extends AnyFunSuite {
 
     // `uploads` as a plain file fails the run at the upload step,
     // after the grid is checkpointed and the merge is cached
-    val bad = java.nio.file.Files.createTempDirectory("w4h_fail").toString
+    val bad = graft.store.Versioned.tempRoot("w4h_fail")
     java.nio.file.Files.write(java.nio.file.Paths.get(bad, "uploads"), Array[Byte](1))
     val nEvents = Tables.events(spark, sf).count()
     val (r, reads) = withFileScanReads(W4hJob.run(spark, sf, bad, "gfs20240101_00z"))
@@ -146,7 +146,7 @@ class W4hJobSpec extends AnyFunSuite {
   test("merge cutoff drops pre-cutoff previous rows BEFORE the join (pushdown)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("w4h_cut").toString
+    val root = graft.store.Versioned.tempRoot("w4h_cut")
     // previous forecast straddling the cutoff: one stale row, one
     // in-window row at a cell/hour the fresh side does not cover
     val prev = Seq(
@@ -171,7 +171,7 @@ class W4hJobSpec extends AnyFunSuite {
   }
 
   test("stale globalCharts entries are pruned from the status catalog") {
-    val root = java.nio.file.Files.createTempDirectory("w4h_prune").toString
+    val root = graft.store.Versioned.tempRoot("w4h_prune")
     val status = new StatusStore(root)
     status.set("globalCharts.-5", "old_source")
     status.set("globalCharts.1", "old_source")
